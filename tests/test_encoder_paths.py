@@ -1,9 +1,9 @@
-"""The stream encoder has three code paths (whole-batch vectorized,
-per-run columnar, per-feature struct-meta) selected by data shape. This
-suite generates random feature batches that straddle every boundary
-(nulls, empty geometries, tiny/huge runs, multi-layer tiles, batch-carry
-splits) and asserts all paths agree with the reference-validated
-single-process codec."""
+"""The stream encoder encodes every tile of a batch with the whole-batch
+kernel (codec.encode_multi_tile_batch); only tiles whose rows carry the
+per-feature struct ``meta`` form go through the reference layer encoder.
+This suite generates random feature batches with nulls, empty geometries,
+tiny/huge runs, multi-layer tiles and batch-carry splits, and asserts the
+tiles decode to what the reference-validated single-process codec says."""
 
 import numpy as np
 import pyarrow as pa
@@ -89,9 +89,9 @@ def _decode_all(result_batches):
 
 
 @pytest.mark.parametrize("seed,n_tiles,max_feats,with_nulls,chunk", [
-    (1, 30, 5, False, 1 << 16),     # small runs -> per-run columnar path
-    (2, 3, 400, False, 1 << 16),    # big runs -> whole-batch vectorized path
-    (3, 20, 120, True, 1 << 16),    # nulls -> scalar fallback mixes
+    (1, 30, 5, False, 1 << 16),     # many small runs
+    (2, 3, 400, False, 1 << 16),    # a few big runs
+    (3, 20, 120, True, 1 << 16),    # null metadata values
     (4, 8, 300, False, 128),        # tiny Arrow batches -> carry machinery
     (5, 1, 900, True, 256),         # one huge multi-layer tile across many batches
 ])
@@ -104,28 +104,90 @@ def test_stream_encoder_matches_reference_codec(seed, n_tiles, max_feats, with_n
 
 
 def test_empty_geometry_rows_dropped():
+    """Rows with an empty command stream are dropped; a tile whose only
+    feature is empty still yields its row, with no bytes, features or
+    layers (refresh_tiles' byte-identical-to-rebuild contract)."""
     rows = {
-        "tile_z": [1, 1], "tile_x": [0, 0], "tile_y": [0, 0],
-        "layer": ["l", "l"], "geom_type": [1, 1], "feature_id": [7, 8],
-        "geom_cmds": [[], [9, 2, 2]], "caption": ["a", "b"], "score": [1, 2],
+        "tile_z": [1, 1, 1], "tile_x": [0, 0, 1], "tile_y": [0, 0, 0],
+        "layer": ["l", "l", "l"], "geom_type": [1, 1, 1], "feature_id": [7, 8, 9],
+        "geom_cmds": [[], [9, 2, 2], []], "caption": ["a", "b", "c"], "score": [1, 2, 3],
     }
     tbl = pa.Table.from_batches([_batch(rows)])
-    out = list(_encode_stream(tbl.to_batches()))
-    assert out[0]["n_features"][0].as_py() == 1
-    layers = codec.decode_tile(out[0]["mvt"][0].as_py())
+    out = pa.Table.from_batches(list(_encode_stream(tbl.to_batches())))
+    assert out["tile_x"].to_pylist() == [0, 1]
+    assert out["n_features"].to_pylist() == [1, 0]
+    assert out["n_layers"].to_pylist() == [1, 0]
+    layers = codec.decode_tile(out["mvt"][0].as_py())
     assert [f.feature_id for f in layers["l"].features] == [8]
+    assert out["mvt"][1].as_py() == b""
 
 
-def test_batch_and_per_tile_paths_byte_identical():
-    """The whole-batch vectorized path and the per-tile fallback (taken
-    when a batch contains any null meta code / empty geom) must emit
-    BYTE-identical tiles — field order included — or tile bytes would
+META_T = pa.list_(pa.struct([
+    pa.field("key", pa.string()), pa.field("tag", pa.int32()), pa.field("s", pa.string()),
+    pa.field("d", pa.float64()), pa.field("i", pa.int64()), pa.field("b", pa.bool_()),
+]))
+
+
+def test_struct_meta_merges_plain_columns():
+    """decode_tiles output plus withColumn: a struct ``meta`` list next to a
+    plain metadata column. Both reach the tile, decoded exactly as the
+    reference codec encodes the merged metadata."""
+    batch = pa.record_batch({
+        "tile_z": pa.array([1, 1], pa.int32()), "tile_x": pa.array([0, 0], pa.int32()),
+        "tile_y": pa.array([0, 0], pa.int32()), "layer": pa.array(["l", "l"]),
+        "geom_type": pa.array([1, 1], pa.int32()), "feature_id": pa.array([1, 2], pa.int64()),
+        "meta": pa.array(
+            [[{"key": "a", "tag": codec.VAL_STRING, "s": "x"}], []], META_T
+        ),
+        "geom_cmds": pa.array([[9, 2, 2], [9, 4, 4]], pa.list_(pa.int64())),
+        "score": pa.array([7, 8], pa.int64()),
+    })
+    (out,) = list(_encode_stream(iter([batch])))
+    want = codec.encode_tile([codec.Layer("l", features=[
+        codec.Feature(1, {"a": (codec.VAL_STRING, "x"), "score": (codec.VAL_INT, 7)},
+                      1, np.array([[1, 1]])),
+        codec.Feature(2, {"score": (codec.VAL_INT, 8)}, 1, np.array([[2, 2]])),
+    ])])
+    assert codec.roundtrip_features(out["mvt"][0].as_py()) == codec.roundtrip_features(want)
+    assert out["n_features"].to_pylist() == [2] and out["n_layers"].to_pylist() == [1]
+
+
+def test_struct_meta_tile_leaves_other_tiles_bytes():
+    """Struct ``meta`` routes only its own tile to the reference encoder:
+    the other tiles of the batch keep the kernel's bytes."""
+    rng = np.random.default_rng(23)
+    rows, _ = _random_rows(rng, n_tiles=6, max_feats=5, with_nulls=True)
+    plain = pa.Table.from_batches([_batch(rows)])
+    empty_meta = pa.array([[]] * plain.num_rows, META_T)
+    struct_meta = pa.array(
+        [[]] * (plain.num_rows - 1) + [[{"key": "k", "tag": codec.VAL_INT, "i": 3}]], META_T
+    )
+
+    def tiles_of(meta):
+        tbl = plain.append_column("meta", meta)
+        return {
+            (rb["tile_x"][i].as_py(), rb["tile_y"][i].as_py()): rb["mvt"][i].as_py()
+            for rb in _encode_stream(tbl.to_batches())
+            for i in range(rb.num_rows)
+        }
+
+    a, b = tiles_of(empty_meta), tiles_of(struct_meta)
+    last = (rows["tile_x"][-1], rows["tile_y"][-1])
+    assert a[last] != b[last]
+    assert {k: v for k, v in a.items() if k != last} == {
+        k: v for k, v in b.items() if k != last
+    }
+
+
+def test_null_meta_tile_leaves_other_tiles_bytes():
+    """A null metadata value in one tile must not change the bytes of the
+    other tiles of its batch — field order included — or tile bytes would
     depend on which rows happened to share an Arrow batch."""
     rng = np.random.default_rng(17)
     rows, _ = _random_rows(rng, n_tiles=12, max_feats=6, with_nulls=False)
     clean = _batch(rows)
-    # per-tile fallback is forced by appending one null-meta row in its
-    # own EXTRA tile: the shared tiles' bytes must not change
+    # one null-meta row in its own EXTRA tile: the shared tiles' bytes
+    # must not change
     rows_dirty = {k: list(v) for k, v in rows.items()}
     rows_dirty["tile_z"].append(10); rows_dirty["tile_x"].append(999)
     rows_dirty["tile_y"].append(999); rows_dirty["layer"].append("alpha")
@@ -145,4 +207,4 @@ def test_batch_and_per_tile_paths_byte_identical():
     a, b = tiles_of(clean), tiles_of(dirty)
     assert (999, 999) in b
     for key, mvt in a.items():
-        assert b[key] == mvt, f"tile {key}: bytes differ between encode paths"
+        assert b[key] == mvt, f"tile {key}: bytes differ between batch layouts"

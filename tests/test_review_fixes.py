@@ -124,23 +124,33 @@ def test_knn_dateline_distance(spark):
     assert rows[0].dist2 == pytest.approx(0.04, rel=1e-6)
 
 
-def test_grouped_encoder_accepts_canonical_features(spark):
-    """encode_tiles_grouped must consume point_features output (geom_pt +
-    plain meta columns), matching the stream encoder byte-for-byte."""
+def test_encode_tiles_canonical_features_match_reference(spark):
+    """encode_tiles over point_features output (geom_pt + a string and a
+    64-bit int metadata column) decodes to exactly what the scalar
+    reference codec.encode_tile gives for the same features — phash beyond
+    2^53 included."""
     imgs = images_df(spark, 150, seed=9)
     feats = tiling.point_features(
         imgs, z=5, layer="im", feature_id=F.xxhash64("image_id"),
         meta={"caption": F.col("caption"), "phash": F.col("phash")},
     )
-    grouped = {
-        (r.tile_x, r.tile_y): codec.roundtrip_features(bytes(r.mvt))
-        for r in tiling.encode_tiles_grouped(feats).collect()
+    by_tile: dict = {}
+    for r in feats.collect():
+        meta = {"caption": (codec.VAL_STRING, r.caption), "phash": (codec.VAL_INT, r.phash)}
+        pt = np.array([[r.geom_pt >> 13, r.geom_pt & 0x1FFF]]) >> 1  # zigzag of px >= 0
+        by_tile.setdefault((r.tile_x, r.tile_y), []).append(
+            codec.Feature(r.feature_id, {k: v for k, v in meta.items() if v[1] is not None}, 1, pt)
+        )
+    want = {
+        key: codec.roundtrip_features(codec.encode_tile([codec.Layer("im", features=fs)]))
+        for key, fs in by_tile.items()
     }
-    stream = {
+    got = {
         (r.tile_x, r.tile_y): codec.roundtrip_features(bytes(r.mvt))
         for r in tiling.encode_tiles(feats).collect()
     }
-    assert grouped == stream
+    assert got == want
+    assert any(abs(r.phash) >= 2**53 for r in imgs.select("phash").collect())
 
 
 def test_single_layer_guard_rejects_union_and_nulls(spark):

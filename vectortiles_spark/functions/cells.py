@@ -50,11 +50,6 @@ def quad_cell_from_xy(tx: Column, ty: Column, level: int) -> Column:
     return sentinel.bitwiseOR(_morton_col(tx, ty, level)).alias("cell")
 
 
-def cell_parent(cell: Column, steps: int = 1) -> Column:
-    """Parent cell `steps` levels up: cell >> 2*steps (sentinel preserved)."""
-    return F.shiftrightunsigned(cell.cast("long"), 2 * steps)
-
-
 def cell_level(cell: Column) -> Column:
     return (F.floor(F.log2(cell.cast("double"))) / 2).cast("int")
 

@@ -521,10 +521,10 @@ def encode_layer_from_streams(
     """Layer wire encode from (feature_id, metadata, geom_type, command_stream)
     tuples whose geometry is ALREADY a uint32 command stream.
 
-    This is the hot path called per tile inside the Spark applyInPandas sink
-    (SURVEY.md §2.D8): upstream stages produce command streams (points via
-    pure Column math, polygons/lines via the NumPy kernel), so the per-tile
-    work left here is dictionary building + wire framing.
+    The scalar reference for layer framing: encode_layer calls it, and
+    encode_tiles uses it for (tile, layer) runs whose features carry the
+    per-feature ARRAY<STRUCT> ``meta`` form (SURVEY.md §2.D8); every other
+    run goes through the whole-batch kernel encode_multi_tile_batch.
 
     Contract per the reference: dictionaries layer-level (totalMeta,
     Internal.hs:321-329; first-appearance order where the reference's
@@ -539,7 +539,7 @@ def encode_layer_from_streams(
     def _vkey(tv: tuple) -> tuple:
         # dedupe by BIT PATTERN for floats: Python's 0.0 == -0.0 would
         # fold two distinct wire values into one slot (and diverge from
-        # the columnar paths' bitwise Arrow dictionaries)
+        # the kernel's bitwise Arrow dictionaries)
         tag, v = tv
         return (tag, struct.pack("<d", v)) if isinstance(v, float) else tv
 
@@ -578,190 +578,6 @@ def encode_layer_from_streams(
     return body
 
 
-def encode_layer_columnar(
-    name: str,
-    fids,
-    gts,
-    streams,
-    meta_cols: list[tuple[str, np.ndarray, np.ndarray, np.ndarray]],
-    version: int = 2,
-    extent: int = DEFAULT_EXTENT,
-) -> bytes:
-    """Columnar layer encode: metadata arrives as per-column dictionary
-    CODES (dictionary-encoded once per Arrow batch upstream) plus fully
-    FRAMED value wire bytes (frame_values_vec) — the per-tile work is
-    np.unique over small int arrays and byte slicing, no per-feature dict
-    churn and no Python per value.
-
-    meta_cols: [(key, codes_int64_for_this_tile, framed_buf, framed_off)]
-    with code -1 meaning NULL (feature lacks the key). Keys dictionary =
-    column order; values dictionary = first-appearance of local uniques.
-    Features are emitted points-first/lines/polys (Internal.hs:123-125) via
-    a stable sort on geom_type.
-    """
-    n = len(fids)
-    order = np.argsort(np.asarray(gts), kind="stable")
-    tag_lists: list[list[int]] = [[] for _ in range(n)]
-    val_parts: list[bytes] = []
-    n_vals = 0
-    emit_order = order.tolist()
-    for k_idx, (key, codes, fbuf, foff) in enumerate(meta_cols):
-        # dictionary in first-appearance order over the EMITTED feature
-        # order (tile-local; matches the vectorized paths byte-for-byte)
-        base_of: dict[int, int] = {}
-        codes_list = codes.tolist()
-        for i in emit_order:
-            c = codes_list[i]
-            if c >= 0 and c not in base_of:
-                base_of[c] = n_vals
-                n_vals += 1
-                val_parts.append(fbuf[foff[c]:foff[c + 1]].tobytes())
-        for i in range(n):
-            c = codes_list[i]
-            if c >= 0:
-                tag_lists[i].append(k_idx)
-                tag_lists[i].append(base_of[c])
-    body = wire.len_delimited(1, name.encode("utf-8"))
-    parts = [body]
-    for i in order.tolist():
-        parts.append(
-            _encode_feature(
-                int(fids[i]),
-                np.asarray(tag_lists[i], dtype=np.uint32),
-                int(gts[i]),
-                np.asarray(streams[i], dtype=np.uint32),
-            )
-        )
-    for key, _, _, _ in meta_cols:
-        parts.append(wire.len_delimited(3, key.encode("utf-8")))
-    parts.extend(val_parts)
-    parts.append(wire.tag_bytes(5, wire.WT_VARINT) + wire.encode_varint(int(extent)))
-    parts.append(wire.tag_bytes(15, wire.WT_VARINT) + wire.encode_varint(int(version)))
-    return b"".join(parts)
-
-
-def encode_layer_columnar_vec(
-    name: str,
-    fids: np.ndarray,
-    gts: np.ndarray,
-    geom_values: np.ndarray,
-    geom_offsets: np.ndarray,
-    meta_cols: list[tuple[str, np.ndarray, np.ndarray, np.ndarray]],
-    version: int = 2,
-    extent: int = DEFAULT_EXTENT,
-) -> bytes:
-    """Fully vectorized layer encode — zero Python work per feature.
-
-    The hot-tile path: a metro tile with 10^5+ features encodes via ~30
-    NumPy array passes (varint-encode all values at once, then ragged
-    scatter/gather to interleave the per-feature wire segments) instead of
-    a 10^5-iteration Python loop. Wire layout identical to
-    encode_layer_from_streams / the reference contract.
-
-    geom_values/geom_offsets: Arrow-style flattened command streams —
-    feature i's stream is geom_values[geom_offsets[i]:geom_offsets[i+1]].
-    meta_cols codes must be all >= 0 (no nulls) — caller falls back to the
-    scalar path otherwise.
-    """
-    n = len(fids)
-    fids = np.asarray(fids, dtype=np.int64)
-    gts = np.asarray(gts, dtype=np.int64)
-    geom_offsets = np.asarray(geom_offsets, dtype=np.int64)
-    glens = geom_offsets[1:] - geom_offsets[:-1]
-
-    # order: points first, then linestrings, then polygons (stable);
-    # single-geom-type runs (the hot-tile norm) skip reordering entirely
-    already_sorted = bool((gts[1:] >= gts[:-1]).all()) if n > 1 else True
-    order = None if already_sorted else np.argsort(gts, kind="stable")
-    if order is not None:
-        fids = fids[order]
-        gts_o = gts[order]
-    else:
-        gts_o = gts
-
-    # geometry: varint-encode the whole flat stream once, slice per feature
-    gbuf_all, gvlens = wire.encode_varints_with_lens(
-        np.asarray(geom_values, dtype=np.uint32).astype(np.uint64)
-    )
-    # per-feature geometry BYTE lengths in original order
-    byte_cum = np.concatenate([[0], np.cumsum(gvlens)])
-    gb_byte_start = byte_cum[geom_offsets[:-1]]
-    gb_byte_len = byte_cum[geom_offsets[1:]] - gb_byte_start
-    if order is not None:
-        gb_byte_start = gb_byte_start[order]
-        gb_byte_len = gb_byte_len[order]
-    gb_byte_len_o = gb_byte_len
-    geom_bytes = wire.ragged_gather(gbuf_all, gb_byte_start, gb_byte_len)
-
-    # metadata tags: (n, 2C) interleaved [key_idx, value_idx] matrix
-    val_chunks: list[np.ndarray] = []
-    n_vals = 0
-    C = len(meta_cols)
-    if C:
-        tag_mat = np.empty((n, 2 * C), dtype=np.uint64)
-        for k_idx, (key, codes, fbuf, foff) in enumerate(meta_cols):
-            codes = np.asarray(codes) if order is None else np.asarray(codes)[order]
-            n_dict = len(foff) - 1
-            # per-tile dictionary in FIRST-APPEARANCE order over the emitted
-            # feature order — a tile-LOCAL canonical order, so tile bytes
-            # cannot depend on Arrow batch boundaries (batch-level code
-            # order varies with partitioning). O(n + n_dict) via the
-            # reverse-assignment trick: last write wins, so writing
-            # positions in reverse leaves each slot's FIRST occurrence.
-            pos = np.full(n_dict, -1, dtype=np.int64)
-            pos[codes[::-1]] = np.arange(codes.size - 1, -1, -1, dtype=np.int64)
-            present = np.flatnonzero(pos >= 0)
-            uniq = present[np.argsort(pos[present], kind="stable")]
-            rank = np.empty(n_dict, dtype=np.int64)
-            rank[uniq] = np.arange(uniq.size)
-            inv = rank[codes]
-            base = n_vals
-            n_vals += len(uniq)
-            # ragged-gather the framed value bytes in dictionary order
-            val_chunks.append(wire.ragged_gather(fbuf, foff[uniq], foff[uniq + 1] - foff[uniq]))
-            tag_mat[:, 2 * k_idx] = k_idx
-            tag_mat[:, 2 * k_idx + 1] = base + inv
-        tbuf, tvlens = wire.encode_varints_with_lens(tag_mat.ravel())
-        tag_byte_lens = tvlens.reshape(n, 2 * C).sum(axis=1)
-    else:
-        tbuf = np.zeros(0, dtype=np.uint8)
-        tag_byte_lens = np.zeros(n, dtype=np.int64)
-
-    ones = np.ones(n, dtype=np.int64)
-
-    def const_slot(byte):
-        return np.full(n, byte, dtype=np.uint8), ones
-
-    fid_buf, fid_lens = wire.encode_varints_with_lens(fids.astype(np.uint64))
-    tlen_buf, tlen_lens = wire.encode_varints_with_lens(tag_byte_lens.astype(np.uint64))
-    glen_buf, glen_lens = wire.encode_varints_with_lens(gb_byte_len_o.astype(np.uint64))
-    gt_buf = gts_o.astype(np.uint8)  # 1..3, single byte
-
-    slots = [
-        (const_slot(0x08)), (fid_buf, fid_lens),                    # id
-    ]
-    if C:
-        slots += [(const_slot(0x12)), (tlen_buf, tlen_lens), (tbuf, tag_byte_lens)]  # tags packed
-    slots += [
-        (const_slot(0x18)), (gt_buf, ones),                         # type
-        (const_slot(0x22)), (glen_buf, glen_lens), (geom_bytes, gb_byte_len_o),  # geometry packed
-    ]
-    body_buf, body_lens = wire.ragged_stitch(slots)
-    blen_buf, blen_lens = wire.encode_varints_with_lens(body_lens.astype(np.uint64))
-    feat_buf, _ = wire.ragged_stitch(
-        [(const_slot(0x12)), (blen_buf, blen_lens), (body_buf, body_lens)]
-    )
-
-    parts = [wire.len_delimited(1, name.encode("utf-8")), feat_buf.tobytes()]
-    for key, _, _, _ in meta_cols:
-        parts.append(wire.len_delimited(3, key.encode("utf-8")))
-    for chunk in val_chunks:
-        parts.append(chunk.tobytes())
-    parts.append(wire.tag_bytes(5, wire.WT_VARINT) + wire.encode_varint(int(extent)))
-    parts.append(wire.tag_bytes(15, wire.WT_VARINT) + wire.encode_varint(int(version)))
-    return b"".join(parts)
-
-
 def encode_multi_tile_batch(
     tz: np.ndarray,
     tx: np.ndarray,
@@ -780,15 +596,24 @@ def encode_multi_tile_batch(
 
     This is the scatter-tile answer: a batch with 50k one-feature ocean
     tiles costs ~20 NumPy array passes total, not 50k per-tile calls. Rows
-    must arrive sorted by (tile, layer, geom_type, feature_id), all
-    geometries non-empty, all metadata codes non-null.
+    must arrive sorted by (tile, layer, geom_type, feature_id), at least
+    one row, all geometries non-empty (the caller masks empty command
+    streams out: an empty feature would make the tile undecodable,
+    Internal.hs:296).
+
+    meta_cols: [(key, codes_int64, framed_buf, framed_off)] — per-column
+    dictionary codes over the batch plus the framed value bytes of the
+    dictionary (frame_values_vec). A code of -1 is NULL: that feature
+    carries no [key, value] pair for the column, and the value stays out
+    of the run's dictionary. The keys block lists every column in column
+    order; value blocks are per column.
 
     Per-run (tile, layer) value dictionaries are built vectorized with the
     run-keyed-unique trick: unique(run_id * K + code) yields every run's
     code set, a per-run permutation reorders each segment to
-    FIRST-APPEARANCE order (the tile-local canonical order every encode
-    path uses), and rank/searchsorted recover each row's local index — so
-    tile bytes are identical across paths AND across Arrow batch layouts.
+    FIRST-APPEARANCE order (tile-local canonical), and rank/searchsorted
+    recover each row's local index — so tile bytes cannot depend on Arrow
+    batch layouts.
 
     Returns (list_of_mvt_bytes_per_tile, tile_starts_rows, n_runs_per_tile)
     aligned with the unique tiles in row order.
@@ -817,24 +642,29 @@ def encode_multi_tile_batch(
     cnt_prev = np.zeros(n_runs, dtype=np.int64)  # per-run value-dict base
     if C:
         tag_mat = np.empty((n, 2 * C), dtype=np.uint64)
+        # which [key, value] pairs exist: False where the code is NULL
+        tag_ok = np.empty((n, 2 * C), dtype=bool)
         for k_idx, (key, codes, fbuf, foff) in enumerate(meta_cols):
             K = np.int64(len(foff) - 1)
-            rkey = rid * (K + 1) + codes
+            valid = codes >= 0
+            tag_ok[:, 2 * k_idx] = valid
+            tag_ok[:, 2 * k_idx + 1] = valid
+            rid_v, codes_v = rid[valid], codes[valid]
+            rkey = rid_v * (K + 1) + codes_v
             u, first_idx, inv_u = np.unique(rkey, return_index=True, return_inverse=True)
             # first position of each run inside u
             run_first = np.searchsorted(u, rid[run_starts] * (K + 1))
             # reorder each run's dictionary segment to FIRST-APPEARANCE
-            # order (tile-local canonical — identical to the per-tile
-            # paths, independent of the batch-level code assignment);
-            # lexsort keeps segments contiguous per run, so run_first
-            # offsets stay valid for the permuted order
+            # order (tile-local canonical, independent of the batch-level
+            # code assignment); lexsort keeps segments contiguous per run,
+            # so run_first offsets stay valid for the permuted order
             run_of_u = (u // (K + 1)).astype(np.int64)
             perm = np.lexsort((first_idx, run_of_u))
             rank = np.empty(len(u), dtype=np.int64)
             rank[perm] = np.arange(len(u))
-            local = rank[inv_u] - run_first[rid]
+            local = rank[inv_u] - run_first[rid_v]
             tag_mat[:, 2 * k_idx] = k_idx
-            tag_mat[:, 2 * k_idx + 1] = (cnt_prev[rid] + local).astype(np.uint64)
+            tag_mat[valid, 2 * k_idx + 1] = (cnt_prev[rid_v] + local).astype(np.uint64)
             # per-run unique counts
             run_cnt = np.concatenate([run_first[1:], [len(u)]]) - run_first
             cnt_prev = cnt_prev + run_cnt
@@ -842,8 +672,11 @@ def encode_multi_tile_batch(
             ucodes = (u[perm] % (K + 1)).astype(np.int64)
             vb = wire.ragged_gather(fbuf, foff[ucodes], foff[ucodes + 1] - foff[ucodes])
             run_val_bytes.append((vb, ucodes, run_first))
-        tbuf, tvlens = wire.encode_varints_with_lens(tag_mat.ravel())
-        tag_lens = tvlens.reshape(n, 2 * C).sum(axis=1)
+        ok = tag_ok.ravel()
+        tbuf, tvlens = wire.encode_varints_with_lens(tag_mat.ravel()[ok])
+        pair_lens = np.zeros(n * 2 * C, dtype=np.int64)
+        pair_lens[ok] = tvlens
+        tag_lens = pair_lens.reshape(n, 2 * C).sum(axis=1)
     else:
         tbuf = np.zeros(0, dtype=np.uint8)
         tag_lens = np.zeros(n, dtype=np.int64)
@@ -851,11 +684,20 @@ def encode_multi_tile_batch(
     # ---- feature framing (whole batch) ----
     ones = np.ones(n, dtype=np.int64)
     fid_buf, fid_lens = wire.encode_varints_with_lens(np.asarray(fids, np.int64).astype(np.uint64))
-    tlen_buf, tlen_lens = wire.encode_varints_with_lens(tag_lens.astype(np.uint64))
     glen_buf, glen_lens = wire.encode_varints_with_lens(gb_len.astype(np.uint64))
     slots = [(np.full(n, 0x08, np.uint8), ones), (fid_buf, fid_lens)]
     if C:
-        slots += [(np.full(n, 0x12, np.uint8), ones), (tlen_buf, tlen_lens), (tbuf, tag_lens)]
+        # a feature whose every metadata code is NULL has no tags field
+        # at all (not an empty one), like the reference encoder
+        has_tags = tag_lens > 0
+        tlen_buf, sub_lens = wire.encode_varints_with_lens(tag_lens[has_tags].astype(np.uint64))
+        tlen_lens = np.zeros(n, dtype=np.int64)
+        tlen_lens[has_tags] = sub_lens
+        slots += [
+            (np.full(int(has_tags.sum()), 0x12, np.uint8), has_tags.astype(np.int64)),
+            (tlen_buf, tlen_lens),
+            (tbuf, tag_lens),
+        ]
     slots += [
         (np.full(n, 0x18, np.uint8), ones), (np.asarray(gts, np.int64).astype(np.uint8), ones),
         (np.full(n, 0x22, np.uint8), ones), (glen_buf, glen_lens), (gbuf, gb_len),
@@ -920,9 +762,8 @@ def encode_multi_tile_batch(
     else:
         vals_cat = np.zeros(0, np.uint8)
 
-    # field order matches the per-tile paths exactly — name, features,
-    # KEYS, values, extent, version — so a tile's bytes cannot depend on
-    # which encode path its Arrow batch happened to route through
+    # field order matches encode_layer_from_streams — name, features,
+    # keys, values, extent, version (…/Tile/Layer.hs:51-55)
     layer_body_lens = head_lens + run_feat_lens + keys_lens + run_val_lens + tail_lens
     llen_buf, llen_lens = wire.encode_varints_with_lens(layer_body_lens.astype(np.uint64))
     run_ones = np.ones(n_runs, dtype=np.int64)
@@ -950,8 +791,8 @@ def encode_multi_tile_batch(
 
 
 def encode_value_bytes(tag: int, v) -> bytes:
-    """Wire bytes of one Value message body (used to pre-encode dictionary
-    uniques once per Arrow batch in the columnar path)."""
+    """Wire bytes of one Value message body (overzoom pre-encodes its
+    dictionary uniques with it)."""
     return _encode_value(tag, v)
 
 

@@ -1,16 +1,17 @@
 """Tile assembly: feature rows -> one MVT byte blob per (z, x, y).
 
-The flagship sink (SURVEY.md §2.D8, north_star): a
-``groupBy(tile_z, tile_x, tile_y).applyInPandas(encode)`` stage whose
-emitted tiles roundtrip-decode to exactly the features that went in,
-using the reference's MVT semantics (zigzag delta commands, layer/feature/
-value protobuf layout — Internal.hs:114-125 + SURVEY.md §1.3).
+The flagship sink (SURVEY.md §2.D8, north_star): a tile-key repartition +
+sort followed by ONE ``mapInArrow`` stream encoder whose emitted tiles
+roundtrip-decode to exactly the features that went in, using the
+reference's MVT semantics (zigzag delta commands, layer/feature/value
+protobuf layout — Internal.hs:114-125 + SURVEY.md §1.3).
 
 Scale design:
 * Geometry is encoded to uint32 command streams UPSTREAM of the shuffle —
   for point features with pure Column math (JVM-side, whole-stage codegen),
   for lines/polygons with the NumPy kernel inside vectorized UDFs. The
-  per-tile Python stage only does dictionary builds + wire framing.
+  encode stage only does dictionary builds + wire framing, for every tile
+  of an Arrow batch at once (codec.encode_multi_tile_batch).
 * Hot tiles (dense metros) are bounded with a deterministic per-tile
   feature cap (rank window) BEFORE the shuffle — the same strategy
   planet-scale tilers use — so no task can receive an unbounded group.
@@ -42,38 +43,6 @@ FEATURE_SCHEMA = (
 )
 
 
-def meta_string(key: str, col) -> object:
-    return F.struct(
-        F.lit(key).alias("key"), F.lit(codec.VAL_STRING).alias("tag"),
-        col.cast("string").alias("s"), F.lit(None).cast("double").alias("d"),
-        F.lit(None).cast("bigint").alias("i"), F.lit(None).cast("boolean").alias("b"),
-    )
-
-
-def meta_double(key: str, col) -> object:
-    return F.struct(
-        F.lit(key).alias("key"), F.lit(codec.VAL_DOUBLE).alias("tag"),
-        F.lit(None).cast("string").alias("s"), col.cast("double").alias("d"),
-        F.lit(None).cast("bigint").alias("i"), F.lit(None).cast("boolean").alias("b"),
-    )
-
-
-def meta_int(key: str, col) -> object:
-    return F.struct(
-        F.lit(key).alias("key"), F.lit(codec.VAL_INT).alias("tag"),
-        F.lit(None).cast("string").alias("s"), F.lit(None).cast("double").alias("d"),
-        col.cast("bigint").alias("i"), F.lit(None).cast("boolean").alias("b"),
-    )
-
-
-def meta_bool(key: str, col) -> object:
-    return F.struct(
-        F.lit(key).alias("key"), F.lit(codec.VAL_BOOL).alias("tag"),
-        F.lit(None).cast("string").alias("s"), F.lit(None).cast("double").alias("d"),
-        F.lit(None).cast("bigint").alias("i"), col.cast("boolean").alias("b"),
-    )
-
-
 def point_features(
     df: DataFrame,
     z: int,
@@ -81,7 +50,7 @@ def point_features(
     lon: str = "lon",
     lat: str = "lat",
     feature_id=None,
-    meta: list | None = None,
+    meta: dict | None = None,
     extent: int = codec.DEFAULT_EXTENT,
 ) -> DataFrame:
     """Rows with lon/lat -> canonical point-feature rows, all JVM-side.
@@ -120,12 +89,10 @@ def point_features(
         fid.cast("bigint").alias("feature_id"),
         geom_col,
     ]
-    if isinstance(meta, dict):
-        # plain typed columns -> columnar fast path in the encoder (the
-        # metadata stays Arrow-columnar through shuffle + dictionary build)
+    if meta:
+        # plain typed columns: the metadata stays Arrow-columnar through
+        # shuffle + the encoder's per-batch dictionary build
         cols += [col.alias(key) for key, col in meta.items()]
-    elif meta:
-        cols.append(F.array(*meta).alias("meta"))
     return df.select(*cols)
 
 
@@ -433,92 +400,6 @@ def _meta_to_dict(meta) -> dict:
     return out
 
 
-def _encode_tile_group_arrow(tbl, extent: int = codec.DEFAULT_EXTENT):
-    """One Arrow batch = one tile's features -> one (z, x, y, mvt) row.
-
-    Arrow in/out (``applyInArrow``) rather than pandas: nullable BIGINT
-    struct fields survive exactly (pandas coerces them to float64, which
-    corrupts 64-bit ints like phash beyond 2^53), and the conversion is
-    cheaper — no pandas block consolidation per group. Accepts the same
-    feature shapes as the stream encoder (geom_pt or geom_cmds, struct
-    'meta' or plain typed metadata columns).
-    """
-    import pyarrow as pa
-
-    from ..mvt import wire
-
-    n = tbl.num_rows
-    z = tbl["tile_z"][0].as_py()
-    x = tbl["tile_x"][0].as_py()
-    y = tbl["tile_y"][0].as_py()
-    layers_col = tbl["layer"].to_pylist()
-    fids = tbl["feature_id"].to_pylist()
-    gts = tbl["geom_type"].to_pylist()
-    if "geom_pt" in tbl.column_names:
-        pts = tbl["geom_pt"].to_pylist()
-        cmds_col = [[9, p >> 13, p & 0x1FFF] for p in pts]
-    else:
-        cmds_col = tbl["geom_cmds"].to_pylist()
-    metas = tbl["meta"].to_pylist() if "meta" in tbl.column_names else [None] * n
-    # plain typed metadata columns (the columnar form)
-    extra = [
-        (f.name, _tag_for_arrow_type(f.type), tbl[f.name].to_pylist())
-        for f in tbl.schema
-        if f.name not in _CORE_COLS
-    ]
-
-    by_layer: dict[str, list] = {}
-    n_feats = 0
-    for i, (name, fid, meta, gt, cmds) in enumerate(
-        zip(layers_col, fids, metas, gts, cmds_col)
-    ):
-        if not cmds:
-            continue  # empty geometry would be undecodable (Internal.hs:296)
-        md = _meta_to_dict(meta)
-        for key, tag, vals in extra:
-            if vals[i] is not None:
-                md[key] = (tag, vals[i])
-        by_layer.setdefault(name, []).append(
-            (int(fid), md, int(gt), np.asarray(cmds, dtype=np.uint32))
-        )
-        n_feats += 1
-
-    body = bytearray()
-    for name in sorted(by_layer):  # deterministic layer order
-        body += wire.len_delimited(
-            3, codec.encode_layer_from_streams(name, by_layer[name], extent=extent)
-        )
-
-    return pa.table(
-        {
-            "tile_z": pa.array([z], pa.int32()),
-            "tile_x": pa.array([x], pa.int32()),
-            "tile_y": pa.array([y], pa.int32()),
-            "mvt": pa.array([bytes(body)], pa.binary()),
-            "n_features": pa.array([n_feats], pa.int64()),
-            "n_layers": pa.array([len(by_layer)], pa.int32()),
-        }
-    )
-
-
-def encode_tiles_grouped(
-    features: DataFrame,
-    max_per_tile: int | None = None,
-    extent: int = codec.DEFAULT_EXTENT,
-) -> DataFrame:
-    """groupBy + applyInArrow variant: one Python call per tile. Simple and
-    correct, but per-group overhead (~ms) dominates when tiles are small —
-    kept for comparison; ``encode_tiles`` is the production path."""
-    if max_per_tile is not None:
-        features = cap_features_per_tile(features, max_per_tile)
-    def encode_group(tbl):  # applyInArrow introspects the signature;
-        return _encode_tile_group_arrow(tbl, extent=extent)  # partials break it
-
-    return features.groupBy("tile_z", "tile_x", "tile_y").applyInArrow(
-        encode_group, schema=TILE_SCHEMA
-    )
-
-
 _CORE_COLS = {
     "tile_z", "tile_x", "tile_y", "layer", "geom_type", "feature_id",
     "meta", "geom_cmds", "geom_pt",
@@ -540,26 +421,34 @@ def _tag_for_arrow_type(t) -> int:
 
 
 def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | None = None):
-    """Stream-encoder factory (extent is captured in the closure so all
-    wire paths declare the layer extent that the upstream pixel math used).
+    """Stream-encoder factory (extent is captured in the closure so every
+    tile declares the layer extent that the upstream pixel math used).
 
-    The encoder consumes (tile-key-sorted) Arrow batches, slices tile
-    runs with NumPy boundary detection, carries the (possibly incomplete)
-    tail tile across batch boundaries. ONE Python crossing per ~64k rows
-    instead of one per tile.
+    The encoder consumes (tile-key-sorted) Arrow batches, carries the
+    (possibly incomplete) tail tile across batch boundaries, and encodes
+    all complete tiles of a batch in ONE codec.encode_multi_tile_batch
+    call: one Python crossing per ~64k rows instead of one per tile.
 
     Metadata columns (any column beyond the core feature schema) are
-    FACTORIZED ONCE PER BATCH (pandas) and their dictionary uniques
-    pre-encoded to wire bytes; per tile the codec only slices the code
-    arrays (codec.encode_layer_columnar). A legacy per-feature
-    ARRAY<STRUCT> 'meta' column is also honored (slow path) for operators
-    with heterogeneous metadata."""
+    dictionary-encoded once per batch and their uniques pre-framed to wire
+    bytes; a NULL value leaves that key off the feature. Rows with an
+    empty command stream are dropped (an empty feature would make the tile
+    undecodable, Internal.hs:296). A tile left with no rows still yields
+    its row (mvt=b"", n_features=0, n_layers=0): refresh_tiles' rebuild
+    contract relies on it.
+
+    A tile with any row carrying the per-feature ARRAY<STRUCT> ``meta``
+    form (decode_tiles output) is encoded by the reference
+    codec.encode_layer_from_streams instead, one call per (tile, layer)
+    run, with the struct keys merged with the plain metadata columns. The
+    choice is made per tile, so a tile's bytes depend only on its rows."""
     import pandas as pd
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     from ..mvt import wire
 
-    def flush(tbl: pa.Table, is_last: bool = True):
+    def flush(tbl: pa.Table):
         """Encode every (complete) tile run in tbl."""
         # NULLs in the core columns would NOT error downstream — they would
         # CORRUPT silently: Arrow converts a null-bearing int column to
@@ -574,12 +463,13 @@ def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | N
                     "rows must carry complete tile keys/ids (filter or fill "
                     "upstream; a NULL here would silently corrupt tile bytes)"
                 )
+        n = tbl.num_rows
         z = tbl["tile_z"].to_numpy(zero_copy_only=False)
         x = tbl["tile_x"].to_numpy(zero_copy_only=False)
         y = tbl["tile_y"].to_numpy(zero_copy_only=False)
         change = (z[1:] != z[:-1]) | (x[1:] != x[:-1]) | (y[1:] != y[:-1])
         starts = np.concatenate([[0], np.flatnonzero(change) + 1])
-        n = tbl.num_rows
+        tile_of = np.concatenate([[0], np.cumsum(change)])  # row -> tile index
         if "layer" in tbl.column_names:
             lcodes, lnames = pd.factorize(tbl["layer"].to_pandas())
             lnames = list(lnames)
@@ -596,7 +486,6 @@ def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | N
             gvals[1::3] = pt >> 13
             gvals[2::3] = pt & 0x1FFF
             goff = np.arange(0, 3 * n + 3, 3, dtype=np.int64)[: n + 1]
-            glens = np.full(n, 3, dtype=np.int64)
         else:
             # zero-copy ragged view of the command streams (no pylist)
             cmds_arr = tbl["geom_cmds"].combine_chunks()
@@ -604,119 +493,86 @@ def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | N
                 cmds_arr = cmds_arr.chunk(0)
             goff = cmds_arr.offsets.to_numpy().astype(np.int64)
             gvals = cmds_arr.values.to_numpy(zero_copy_only=False)
-            glens = goff[1:] - goff[:-1]
-        metas = tbl["meta"].to_pylist() if "meta" in tbl.column_names else None
+        glens = goff[1:] - goff[:-1]
 
         # dictionary-encode metadata columns once per batch (Arrow C++, no
         # PyObject churn) and frame their uniques' value bytes vectorized
-        import pyarrow.compute as pc
-
+        meta_fields = [f for f in tbl.schema if f.name not in _CORE_COLS]
         meta_specs: list[tuple[str, np.ndarray, np.ndarray, np.ndarray]] = []
-        for field in tbl.schema:
-            if field.name in _CORE_COLS:
-                continue
-            tag = _tag_for_arrow_type(field.type)
+        for field in meta_fields:
             col = tbl[field.name].combine_chunks()
             if hasattr(col, "chunk"):  # older pyarrow returns ChunkedArray
                 col = col.chunk(0)
             d = col.dictionary_encode()
             codes = pc.fill_null(d.indices, -1).to_numpy(zero_copy_only=False).astype(np.int64)
-            fbuf, foff = codec.frame_values_vec(tag, d.dictionary)
+            fbuf, foff = codec.frame_values_vec(_tag_for_arrow_type(field.type), d.dictionary)
             meta_specs.append((field.name, codes, fbuf, foff))
 
-        # ---- whole-batch vectorized path: every tile in ~20 array passes ----
-        all_nonempty_batch = bool(glens.min(initial=1) > 0)
-        codes_ok_batch = all(codes.min(initial=0) >= 0 for _, codes, _, _ in meta_specs)
-        metas_empty = metas is None or not any(metas)
-        if metas_empty and all_nonempty_batch and codes_ok_batch and n:
-            mvts, tile_starts, n_runs_per_tile = codec.encode_multi_tile_batch(
-                z, x, y, lcodes, lnames, fids, gts, gvals, goff, meta_specs,
+        n_tiles = len(starts)
+        keep = glens > 0
+        mvts = [b""] * n_tiles
+        n_feats = np.bincount(tile_of[keep], minlength=n_tiles)
+        n_layers = np.zeros(n_tiles, dtype=np.int64)
+        by_ref = np.zeros(n_tiles, dtype=bool)  # tiles with struct meta rows
+        if "meta" in tbl.column_names:
+            mlen = pc.fill_null(pc.list_value_length(tbl["meta"]), 0)
+            by_ref[tile_of[mlen.to_numpy(zero_copy_only=False) > 0]] = True
+
+        # ---- whole-batch kernel: every other tile in ~20 array passes ----
+        kern = keep & ~by_ref[tile_of]
+        rows = np.flatnonzero(kern)
+        if rows.size:
+            kvals = gvals[goff[0]:goff[-1]][np.repeat(kern, glens)]
+            koff = np.concatenate([[0], np.cumsum(glens[rows])])
+            out, ts, runs = codec.encode_multi_tile_batch(
+                z[rows], x[rows], y[rows], lcodes[rows], lnames, fids[rows], gts[rows],
+                kvals, koff, [(k, c[rows], fb, fo) for k, c, fb, fo in meta_specs],
                 extent=extent,
             )
-            ts = tile_starts
-            nf = np.diff(np.concatenate([ts, [n]]))
-            return pa.record_batch(
-                {
-                    "tile_z": pa.array(z[ts].astype(np.int32), pa.int32()),
-                    "tile_x": pa.array(x[ts].astype(np.int32), pa.int32()),
-                    "tile_y": pa.array(y[ts].astype(np.int32), pa.int32()),
-                    "mvt": pa.array(mvts, pa.binary()),
-                    "n_features": pa.array(nf.astype(np.int64), pa.int64()),
-                    "n_layers": pa.array(n_runs_per_tile.astype(np.int32), pa.int32()),
-                }
-            )
+            tiles = tile_of[rows[ts]]
+            for t, m in zip(tiles.tolist(), out):
+                mvts[t] = m
+            n_layers[tiles] = runs
 
-        ends = np.concatenate([starts[1:], [n]])
-        out_z, out_x, out_y, out_mvt, out_nf, out_nl = [], [], [], [], [], []
-        for lo, hi in zip(starts.tolist(), ends.tolist()):
-            body = bytearray()
-            n_feats = 0
-            n_layers = 0
-            # split the run by layer (runs are layer-sorted within tile)
-            lchange = np.flatnonzero(lcodes[lo + 1:hi] != lcodes[lo:hi - 1]) + lo + 1
-            lstarts = [lo] + lchange.tolist()
-            lends = lstarts[1:] + [hi]
-            for ls, le in zip(lstarts, lends):
-                run_glens = glens[ls:le]
-                has_meta_structs = metas is not None and any(metas[i] for i in range(ls, le))
-                all_nonempty = bool(run_glens.min(initial=1) > 0)
-                codes_ok = all(
-                    codes[ls:le].min(initial=0) >= 0 for _, codes, _, _ in meta_specs
-                )
-                if not has_meta_structs and all_nonempty and codes_ok and (le - ls) >= 64:
-                    # vectorized hot-tile path: no per-feature Python at all
-                    layer_bytes = codec.encode_layer_columnar_vec(
-                        lnames[lcodes[ls]],
-                        fids[ls:le],
-                        gts[ls:le],
-                        gvals[goff[ls]:goff[le]],
-                        goff[ls:le + 1] - goff[ls],
-                        [(key, codes[ls:le], fbuf, foff) for key, codes, fbuf, foff in meta_specs],
-                        extent=extent,
-                    )
-                    n_feats += le - ls
-                elif has_meta_structs:
-                    idx = [i for i in range(ls, le) if glens[i] > 0]
-                    if not idx:
-                        continue
-                    feats = [
-                        (int(fids[i]), _meta_to_dict(metas[i]), int(gts[i]),
+        # ---- reference lane: tiles carrying struct meta, per (tile, layer) ----
+        if by_ref.any():
+            metas = tbl["meta"].to_pylist()
+            plain = [
+                (f.name, _tag_for_arrow_type(f.type), tbl[f.name].to_pylist())
+                for f in meta_fields
+            ]
+            run_chg = change | (lcodes[1:] != lcodes[:-1])
+            run_lo = np.concatenate([[0], np.flatnonzero(run_chg) + 1])
+            run_hi = np.concatenate([run_lo[1:], [n]])
+            for lo, hi in zip(run_lo.tolist(), run_hi.tolist()):
+                t = int(tile_of[lo])
+                idx = np.flatnonzero(keep[lo:hi]) + lo
+                if not by_ref[t] or not idx.size:
+                    continue
+                feats = []
+                for i in idx.tolist():
+                    md = _meta_to_dict(metas[i])
+                    for key, tag, vals in plain:
+                        if vals[i] is not None:
+                            md[key] = (tag, vals[i])
+                    feats.append(
+                        (int(fids[i]), md, int(gts[i]),
                          gvals[goff[i]:goff[i + 1]].astype(np.uint32))
-                        for i in idx
-                    ]
-                    layer_bytes = codec.encode_layer_from_streams(
-                        lnames[lcodes[ls]], feats, extent=extent
                     )
-                    n_feats += len(idx)
-                else:
-                    idx = [i for i in range(ls, le) if glens[i] > 0]
-                    if not idx:
-                        continue
-                    layer_bytes = codec.encode_layer_columnar(
-                        lnames[lcodes[ls]],
-                        fids[idx],
-                        gts[idx],
-                        [gvals[goff[i]:goff[i + 1]] for i in idx],
-                        [(key, codes[idx], fbuf, foff) for key, codes, fbuf, foff in meta_specs],
-                        extent=extent,
-                    )
-                    n_feats += len(idx)
-                body += wire.len_delimited(3, layer_bytes)
-                n_layers += 1
-            out_z.append(int(z[lo]))
-            out_x.append(int(x[lo]))
-            out_y.append(int(y[lo]))
-            out_mvt.append(bytes(body))
-            out_nf.append(n_feats)
-            out_nl.append(n_layers)
+                layer_bytes = codec.encode_layer_from_streams(
+                    lnames[lcodes[lo]], feats, extent=extent
+                )
+                mvts[t] += wire.len_delimited(3, layer_bytes)
+                n_layers[t] += 1
+
         return pa.record_batch(
             {
-                "tile_z": pa.array(out_z, pa.int32()),
-                "tile_x": pa.array(out_x, pa.int32()),
-                "tile_y": pa.array(out_y, pa.int32()),
-                "mvt": pa.array(out_mvt, pa.binary()),
-                "n_features": pa.array(out_nf, pa.int64()),
-                "n_layers": pa.array(out_nl, pa.int32()),
+                "tile_z": pa.array(z[starts].astype(np.int32), pa.int32()),
+                "tile_x": pa.array(x[starts].astype(np.int32), pa.int32()),
+                "tile_y": pa.array(y[starts].astype(np.int32), pa.int32()),
+                "mvt": pa.array(mvts, pa.binary()),
+                "n_features": pa.array(n_feats.astype(np.int64), pa.int64()),
+                "n_layers": pa.array(n_layers.astype(np.int32), pa.int32()),
             }
         )
 
@@ -742,7 +598,7 @@ def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | N
                 else pa.concat_tables(carry_parts)
             ).combine_chunks()
             carry_parts, carry_key = [], None
-            return flush(whole, is_last=True)
+            return flush(whole)
 
         for batch in batches:
             tbl = pa.Table.from_batches([batch])
@@ -750,7 +606,7 @@ def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | N
                 continue
             if carry_key is not None and key_at(tbl, 0) != carry_key:
                 rb = drain_carry()
-                if rb is not None and rb.num_rows:
+                if rb is not None:
                     yield rb
             if carry_key is not None and key_at(tbl, -1) == carry_key:
                 carry_parts.append(tbl)  # whole batch continues the tail tile
@@ -764,7 +620,7 @@ def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | N
                 head_end = int(np.flatnonzero(~same)[0]) if (~same).any() else tbl.num_rows
                 carry_parts.append(tbl.slice(0, head_end))
                 rb = drain_carry()
-                if rb is not None and rb.num_rows:
+                if rb is not None:
                     yield rb
                 tbl = tbl.slice(head_end)
                 if tbl.num_rows == 0:
@@ -777,13 +633,11 @@ def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | N
             starts = np.flatnonzero(change) + 1
             last_start = int(starts[-1]) if starts.size else 0
             if last_start > 0:
-                rb = flush(tbl.slice(0, last_start).combine_chunks(), is_last=True)
-                if rb is not None and rb.num_rows:
-                    yield rb
+                yield flush(tbl.slice(0, last_start).combine_chunks())
             carry_parts.append(tbl.slice(last_start))
             carry_key = key_at(tbl, -1)
         rb = drain_carry()
-        if rb is not None and rb.num_rows:
+        if rb is not None:
             yield rb
 
     return encode_stream

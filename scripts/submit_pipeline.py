@@ -1,6 +1,9 @@
 """spark-submit entry point for the tiling pipeline (north_rule packaging).
 
-Cluster usage:
+Cluster usage (Python workers start from a module of the engine, so the
+zip must be on the executors' PYTHONPATH as well; YARN puts --py-files
+there, elsewhere add --conf spark.executorEnv.PYTHONPATH=... or install
+the package on the executors):
     scripts/build_pyfiles.sh                         # -> dist/vectortiles_spark.zip
     spark-submit --py-files dist/vectortiles_spark.zip \
         scripts/submit_pipeline.py \

@@ -97,6 +97,34 @@ def test_minhash_signature_stable_across_partitioning(spark):
     assert sorted(map(tuple, one.collect())) == sorted(map(tuple, many.collect()))
 
 
+def _null_on_beta(c):
+    """Shingle hasher that yields NULL for every shingle containing 'beta'."""
+    return F.when(F.instr(c, "beta") > 0, F.lit(None).cast("long")).otherwise(
+        dedup.default_hasher(c)
+    )
+
+
+def test_minhash_signature_null_hashes_match_min(spark):
+    """NULL shingle hashes are skipped as min() skips them: signatures equal
+    a plain groupBy().agg(min(...)) over the same shingle relation, a doc
+    whose every hash is NULL included (its signature is all NULL)."""
+    pdf, _ = _corpus(30)
+    pdf.loc[len(pdf)] = [1000, "beta beta beta beta beta"]
+    docs = spark.createDataFrame(pdf).repartition(3)
+    sh = dedup.shingle_docs(docs, hasher=_null_on_beta)
+    assert sh.filter(F.col("h31").isNull()).count() > 0
+    ref = sh.groupBy("doc_id").agg(
+        *[
+            F.min(F.pmod(F.lit(a) * F.col("h31") + F.lit(b), F.lit(dedup._P))).alias(f"mh{i}")
+            for i, (a, b) in enumerate(dedup._hash_params(dedup._H))
+        ]
+    )
+    got = sorted(map(tuple, dedup.minhash_signatures(docs, hasher=_null_on_beta).collect()))
+    want = sorted(map(tuple, ref.collect()))
+    assert got == want
+    assert [r for r in got if r[0] == 1000] == [(1000,) + (None,) * dedup._H]
+
+
 def test_band_bucket_cap_bounds_degenerate_clusters(spark):
     """2000 identical docs would make every LSH band bucket quadratic
     (2M pairs per band) without the cap; with band_cap the candidate space

@@ -200,7 +200,8 @@ def minhash_signatures(
             if n == 0:
                 continue
             did = b.column(b.schema.get_field_index("doc_id"))
-            h = b.column(b.schema.get_field_index("h31")).to_numpy(
+            hc = b.column(b.schema.get_field_index("h31"))
+            h = (hc.fill_null(0) if hc.null_count else hc).to_numpy(
                 zero_copy_only=False
             )
             if n == 1:
@@ -219,10 +220,19 @@ def minhash_signatures(
                         + 1,
                     )
                 ).astype(np.int64)
-            mins = np.minimum.reduceat((A * h + B) % _P, starts, axis=1)
+            vals = (A * h + B) % _P
+            if hc.null_count:
+                # min() skips NULLs: a NULL hash row takes the value _P,
+                # above every real one, and a run with no other row gets
+                # a NULL minimum, as min() over all-NULL input does
+                vals[:, ~hc.is_valid().to_numpy(zero_copy_only=False)] = _P
+            mins = np.minimum.reduceat(vals, starts, axis=1)
+            null = mins == _P if hc.null_count else None
             cols = {"doc_id": did.take(pa.array(starts))}
             for i in range(_H):
-                cols[f"mh{i}"] = pa.array(mins[i], pa.int64())
+                cols[f"mh{i}"] = pa.array(
+                    mins[i], pa.int64(), mask=None if null is None else null[i]
+                )
             yield pa.record_batch(cols)
 
     part = sh.mapInArrow(partial_mins, out_schema)

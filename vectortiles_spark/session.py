@@ -44,11 +44,24 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """Build (or return) the tuned session.
+
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, and that variable
+    to the number of cores this process may run on. ``extra_conf`` is
+    applied last, so it overrides every setting made here.
+
+    Python workers start from ``vectortiles_spark._worker_daemon``, so the
+    engine must be importable by the worker interpreter when the daemon
+    starts (``PYTHONPATH``, working directory or an install). Engine UDFs,
+    pickled by reference, already need it importable, but only inside
+    tasks, where ``--py-files`` archives are on the path too: an engine
+    shipped only that way must also be on the executors' ``PYTHONPATH``.
+    """
     _tune_malloc()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        n = cpus if cpus != "*" else os.cpu_count() or 8
+        n = cpus if cpus != "*" else len(os.sched_getaffinity(0))
         shuffle_partitions = int(master[6:-1]) if master.startswith("local[") and master[6:-1].isdigit() else int(n)
     # resolve driver memory BEFORE building java options: extra_conf may
     # override spark.driver.memory, and -Xms (AlwaysPreTouch) larger than
@@ -115,6 +128,13 @@ def get_spark(
             "spark.executor.extraJavaOptions",
             "-XX:+AlwaysPreTouch -XX:+UseParallelGC",
         )
+        # the stock daemon, minus PySpark's per-task rescan of every zip
+        # archive on the worker's import path (pyspark.zip, the Spark jar,
+        # py4j; _worker_daemon.py has why it is safe). Measured on 4
+        # cores: a no-op 128-task mapInArrow took 4.6-7.6 s with the stock
+        # daemon and 1.9-2.1 s with this one; tilebench image_tiles' median
+        # pass 7.9 -> 5.8 s over 10 pairs
+        .config("spark.python.daemon.module", "vectortiles_spark._worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -117,6 +117,44 @@ def test_point_in_polygon_with_hole():
     assert G.points_in_polygon(px, py, [outer, hole]).tolist() == [True, False]
 
 
+def test_ring_edges_concatenated_even_odd_is_xor_of_rings():
+    """One even-odd pass over every ring's concatenated edges equals the
+    XOR of per-ring ``points_in_ring``, bit for bit — including points on
+    vertices and on horizontal edges, where ray casts are most fragile."""
+    from hypothesis import given, settings, strategies as st
+
+    @settings(max_examples=200, deadline=None)
+    @given(st.integers(0, 2**32 - 1))
+    def run(seed):
+        rng = np.random.Generator(np.random.PCG64(seed))
+        rings = []
+        for _ in range(int(rng.integers(1, 5))):  # exterior + 0-3 "holes"
+            m = int(rng.integers(3, 9))
+            r = rng.integers(-6, 7, (m, 2)).astype(np.float64)
+            if rng.random() < 0.5:  # a horizontal edge
+                r[1, 1] = r[0, 1]
+            rings.append(np.vstack([r, r[:1]]))
+        verts = np.vstack(rings)
+        horiz = [
+            ((r[i, 0] + r[i + 1, 0]) / 2, r[i, 1])
+            for r in rings for i in range(len(r) - 1) if r[i, 1] == r[i + 1, 1]
+        ]
+        grid = rng.integers(-7, 8, (40, 2)).astype(np.float64)
+        pts = np.vstack([verts, np.array(horiz).reshape(-1, 2), grid,
+                         rng.uniform(-7, 7, (40, 2))])
+        px, py = pts[:, 0], pts[:, 1]
+        want = np.zeros(len(pts), dtype=bool)
+        for r in rings:
+            want ^= G.points_in_ring(px, py, r)
+        edges = G.ring_edges(rings)
+        assert edges.shape == (sum(len(r) - 1 for r in rings), 4)
+        assert edges.dtype == np.float64
+        got = G.points_in_edges(px, py, edges)
+        assert got.dtype == bool and np.array_equal(got, want), seed
+
+    run()
+
+
 # --- batched encode kernel: geoms_to_streams_batch ≡ geom_to_stream ---
 
 

@@ -1,11 +1,15 @@
 """Spatial join operators vs brute-force NumPy oracles."""
 
+import re
+
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from vectortiles_spark.mvt.geometry import points_in_ring
 from vectortiles_spark.operators.spatial_join import knn_join, pip_join
+from vectortiles_spark.plans import audit
 
 
 def _points(n=400, seed=11):
@@ -218,6 +222,89 @@ def test_pip_join_renamed_coords_and_preserved_tiles(spark):
     assert [r.pid for r in out] == [1]
     # caller's own tile columns survive untouched
     assert out[0].tile_x == 77 and out[0].tile_y == 88
+
+
+def test_pip_join_shared_polygon_id_tests_each_rows_rings(spark):
+    """Two polygon rows sharing one id each test their OWN rings: each
+    point matches exactly once (the rings are keyed by a per-row index,
+    not by the id)."""
+    def sq(x0):
+        return [[[x0, 0.0], [x0 + 1, 0.0], [x0 + 1, 1.0], [x0, 1.0], [x0, 0.0]]]
+
+    polys = spark.createDataFrame(
+        [("a", sq(0.0)), ("a", sq(2.0))],
+        "polygon_id string, rings array<array<array<double>>>",
+    )
+    pts = spark.createDataFrame(
+        [(1, 0.5, 0.5), (2, 2.5, 0.5)], "pt_id long, lon double, lat double"
+    )
+    got = sorted(
+        (r.pt_id, r.polygon_id)
+        for r in pip_join(pts, polys, z=4).select("pt_id", "polygon_id").collect()
+    )
+    assert got == [(1, "a"), (2, "a")]
+
+
+@pytest.mark.parametrize(
+    "rings, fragment",
+    [
+        (None, "polygon 'bad' has no rings"),
+        ([], "polygon 'bad' has no rings"),
+        ([[[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 0.0]], None],
+         "polygon 'bad' ring 1 is NULL"),
+        ([[]], "polygon 'bad' ring 0 has 0 vertices"),
+        ([[[0.0, 0.0], [1.0, 0.0], [0.0, 0.0]]], "polygon 'bad' ring 0 has 3 vertices"),
+        ([[[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0]]],
+         "polygon 'bad' ring 0 is not closed"),
+        ([[[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 0.0]],
+          [[0.2, 0.2], [0.4, 0.2], [0.4, 0.4], [0.2, 0.3]]],
+         "polygon 'bad' ring 1 is not closed"),
+        ([[[0.0, 0.0], [1.0, None], [1.0, 1.0], [0.0, 0.0]]],
+         "polygon 'bad' ring 0 has a vertex"),
+    ],
+    ids=["null-rings", "no-rings", "null-ring", "empty-exterior",
+         "three-vertices", "open-exterior", "open-hole", "null-coordinate"],
+)
+def test_pip_join_malformed_polygon_raises(spark, rings, fragment):
+    good = [[[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0], [0.0, 0.0]]]
+    polys = spark.createDataFrame(
+        [("ok", good), ("bad", rings)],
+        "polygon_id string, rings array<array<array<double>>>",
+    )
+    pts = spark.createDataFrame([(1, 0.5, 0.5)], "pt_id long, lon double, lat double")
+    with pytest.raises(ValueError, match=re.escape(fragment)):
+        pip_join(pts, polys, z=4)
+
+
+def test_pip_join_sends_only_predicate_arguments_to_python(spark):
+    """The refinement is a scalar Arrow predicate: only (lon, lat, polygon
+    index) reach Python, so a ~1 KB payload column stays in the JVM and
+    comes out of the join unchanged."""
+    rng = np.random.Generator(np.random.PCG64(5))
+    n = 2000
+    lon, lat = rng.uniform(0.0, 4.0, n), rng.uniform(0.0, 4.0, n)
+    payloads = [bytes(rng.integers(0, 256, 1024, dtype=np.uint8)) for _ in range(n)]
+    pts = spark.createDataFrame(
+        [(i, float(lon[i]), float(lat[i]), bytearray(payloads[i])) for i in range(n)],
+        "pt_id long, lon double, lat double, payload binary",
+    )
+    tri = [[[0.0, 0.0], [4.0, 0.0], [0.0, 4.0], [0.0, 0.0]]]
+    polys = spark.createDataFrame(
+        [("tri", tri)], "polygon_id string, rings array<array<array<double>>>"
+    )
+    joined = pip_join(pts, polys, z=3)
+    rows = joined.collect()
+
+    plan = audit.plan_of(joined)
+    assert "ArrowEvalPython" in plan
+    assert "MapInPandas" not in plan and "FlatMapGroupsInPandas" not in plan
+    sent = audit.python_bytes_sent(joined)
+    # every point's tile is covered by the triangle's bbox: all are candidates
+    assert 0 < sent < 64 * n, sent
+
+    want = {i for i in range(n) if lon[i] + lat[i] < 4.0}
+    assert {r.pt_id for r in rows} == want
+    assert all(bytes(r.payload) == payloads[r.pt_id] for r in rows)
 
 
 def test_raster_skips_corrupt_rows(spark):

@@ -397,23 +397,39 @@ def geoms_to_streams_batch(
     return values, offsets
 
 
+def ring_edges(rings) -> np.ndarray:
+    """Every edge of every CLOSED ring, concatenated: float64 (e, 4) rows of
+    (x0, y0, x1, y1). Even-odd over the concatenation is the XOR of the
+    per-ring tests, so a polygon's holes need no second pass."""
+    parts = [np.asarray(r, dtype=np.float64) for r in rings]
+    if not parts:
+        return np.empty((0, 4), dtype=np.float64)
+    return np.concatenate([np.hstack([r[:-1], r[1:]]) for r in parts])
+
+
+def points_in_edges(px: np.ndarray, py: np.ndarray, edges: np.ndarray) -> np.ndarray:
+    """Vectorized even-odd ray cast of points against ``ring_edges`` output.
+
+    px, py: (n,) query points; edges: (e, 4). Returns bool (n,): True when
+    a ray towards +x crosses an odd number of edges. The one copy of the
+    crossing test; ``points_in_ring`` is this over one ring's edges.
+    """
+    x0, y0, x1, y1 = np.asarray(edges, dtype=np.float64).T[:, None, :]
+    px = np.asarray(px, dtype=np.float64)[:, None]
+    py = np.asarray(py, dtype=np.float64)[:, None]
+    cond = (y0 > py) != (y1 > py)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xint = x0 + (py - y0) * (x1 - x0) / (y1 - y0)
+    crossing = cond & (px < xint)
+    return crossing.sum(axis=1) % 2 == 1
+
+
 def points_in_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
     """Vectorized ray-casting point-in-ring test (boundary-exclusive-ish).
 
     px, py: (n,) query points; ring: (m, 2) CLOSED ring. Returns bool (n,).
-    Used by the broadcast spatial hash join's exact refinement stage.
     """
-    r = np.asarray(ring, dtype=np.float64)
-    x0, y0 = r[:-1, 0], r[:-1, 1]
-    x1, y1 = r[1:, 0], r[1:, 1]
-    px = np.asarray(px, dtype=np.float64)[:, None]
-    py = np.asarray(py, dtype=np.float64)[:, None]
-    cond = (y0[None, :] > py) != (y1[None, :] > py)
-    denom = y1 - y0
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = x0[None, :] + (py - y0[None, :]) * (x1 - x0)[None, :] / denom[None, :]
-    crossing = cond & (px < xint)
-    return crossing.sum(axis=1) % 2 == 1
+    return points_in_edges(px, py, ring_edges([ring]))
 
 
 def points_in_polygon(px: np.ndarray, py: np.ndarray, poly: list[np.ndarray]) -> np.ndarray:

@@ -3,19 +3,26 @@ over cell-ring neighborhoods (SURVEY.md §2.D5, D6).
 
 The pattern (SedonaDB/GeoMesa-style, done with plain DataFrame ops §4.1):
 spatial predicate -> coarse CELL EQUI-JOIN (hash-partitionable, AQE-aware)
--> exact refinement. The only Python is the exact ray-cast, batched per
-Arrow batch and vectorized per polygon inside (NumPy over all points x
-edges at once) — never per row.
+-> exact refinement. The only Python is pip_join's exact ray cast: a
+scalar Arrow predicate inside ``.where(...)``, which Spark plans as
+``ArrowEvalPython``. Only its arguments (lon, lat, polygon row index)
+cross to Python; the rest of each candidate row stays in the JVM. Inside,
+the cast is vectorized per polygon over all of a batch's points (NumPy
+over points x edges at once) — never per row.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType, DoubleType, IntegerType, StructField, StructType,
+)
 
 from ..functions.tiles import tile_x, tile_y
-from ..mvt.geometry import points_in_ring
+from ..mvt.geometry import points_in_edges, ring_edges
 
 
 def polygons_with_tiles(polygons: DataFrame, z: int) -> DataFrame:
@@ -44,30 +51,67 @@ def polygons_with_tiles(polygons: DataFrame, z: int) -> DataFrame:
     )
 
 
-def _make_refine_pip(lon: str, lat: str):
-    """Exact even-odd ray-cast refinement, vectorized per polygon per batch.
-    Built per call so the refinement reads the SAME coordinate columns the
-    coarse tile stage used (a hardcoded 'lon'/'lat' here would crash — or
-    silently ray-cast stale columns — under renamed inputs)."""
+def _checked_rings(pid, rings) -> list[np.ndarray]:
+    """A collected polygon's rings as float64 (m, 2) arrays, or a
+    ValueError naming the polygon and ring: a malformed polygon must fail
+    loudly, not silently match nothing."""
+    if rings is None or len(rings) == 0:
+        raise ValueError(f"pip_join: polygon {pid!r} has no rings (NULL or empty)")
+    out = []
+    for i, ring in enumerate(rings):
+        if ring is None:
+            raise ValueError(f"pip_join: polygon {pid!r} ring {i} is NULL")
+        if len(ring) < 4:
+            raise ValueError(
+                f"pip_join: polygon {pid!r} ring {i} has {len(ring)} vertices; "
+                "a closed ring needs at least 4"
+            )
+        try:
+            r = np.array(ring, dtype=np.float64)  # a NULL coordinate -> NaN
+        except (TypeError, ValueError):  # NULL vertex or ragged vertices
+            r = np.empty(0)
+        if r.ndim != 2 or r.shape[1] < 2 or not np.isfinite(r[:, :2]).all():
+            raise ValueError(
+                f"pip_join: polygon {pid!r} ring {i} has a vertex that is not "
+                "a finite [lon, lat] pair"
+            )
+        r = r[:, :2]
+        if not np.array_equal(r[0], r[-1]):
+            raise ValueError(
+                f"pip_join: polygon {pid!r} ring {i} is not closed "
+                "(its last vertex must repeat its first)"
+            )
+        out.append(r)
+    ext_lon = out[0][:, 0]
+    if ext_lon.max() - ext_lon.min() > 180.0:
+        raise ValueError(
+            f"pip_join: polygon {pid!r} spans >180 deg of longitude — "
+            "it likely crosses the antimeridian; split it at the seam first "
+            "(RFC 7946 s3.1.9)"
+        )
+    return out
 
-    def _refine_pip(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            for pid, grp in pdf.groupby("__pid", sort=False):
-                rings = grp["rings"].iloc[0]
-                px = grp[lon].to_numpy(dtype=np.float64)
-                py = grp[lat].to_numpy(dtype=np.float64)
-                inside = np.zeros(len(grp), dtype=bool)
-                for ring in rings:  # even-odd across all rings handles holes
-                    # Arrow hands nested lists as object arrays; stack to (m, 2)
-                    ring_arr = np.stack([np.asarray(p, dtype=np.float64) for p in ring])
-                    inside ^= points_in_ring(px, py, ring_arr)
-                keep[pdf.index.get_indexer(grp.index)] = inside
-            yield pdf[keep].drop(columns=["rings"])
 
-    return _refine_pip
+def _inside_predicate(edges: list[np.ndarray]):
+    """Scalar Arrow predicate (lon, lat, polygon row index) -> inside.
+    ``edges[k]`` is polygon row k's ``ring_edges``; it travels in the
+    closure (PySpark broadcasts a pickled command past 1 MB by itself)."""
+
+    @F.arrow_udf("boolean")
+    def inside(lon: pa.Array, lat: pa.Array, idx: pa.Array) -> pa.Array:
+        px = lon.to_numpy(zero_copy_only=False)
+        py = lat.to_numpy(zero_copy_only=False)
+        k = idx.to_numpy(zero_copy_only=False)
+        out = np.zeros(len(k), dtype=bool)
+        order = np.argsort(k, kind="stable")
+        ks = k[order]
+        cuts = np.flatnonzero(ks[1:] != ks[:-1]) + 1
+        for sel in np.split(order, cuts):
+            if len(sel):
+                out[sel] = points_in_edges(px[sel], py[sel], edges[k[sel[0]]])
+        return pa.array(out)
+
+    return inside
 
 
 def pip_join(
@@ -81,45 +125,55 @@ def pip_join(
     """Points ⋈ polygons: coarse tile equi-join (polygon side broadcast) then
     exact ray-cast refinement. Returns point rows + matched polygon_id.
 
-    polygons schema: (polygon_id string, rings ARRAY<ARRAY<ARRAY<DOUBLE>>>)
-    — rings in lon/lat, ring 0 exterior, later rings holes (even-odd).
-    Polygons must NOT cross the antimeridian (the GeoJSON RFC 7946
-    contract: split seam-crossing shapes first) — the bbox explode and the
-    raw-lon ray-cast both assume lon_min <= lon_max, so a crossing polygon
-    would match the wrong hemisphere. Validated here (polygons are the
-    small side; one cheap aggregate) rather than silently mis-joining.
+    polygons schema: (polygon_id, rings ARRAY<ARRAY<ARRAY<DOUBLE>>>) — rings
+    in lon/lat, ring 0 exterior, later rings holes (even-odd), every ring
+    CLOSED. Polygons are the small side: they are collected to the driver
+    once, and each row gets a dense index fixed at that moment. The
+    broadcast dim carries only (index, polygon_id, tile key); each row's
+    rings become one stacked edge array keyed by that index, so rows that
+    share a polygon_id still each test their own rings. The refinement is
+    a scalar Arrow predicate in ``.where(...)``: only (lon, lat, index)
+    cross to Python, every other column stays in the JVM.
+
+    Raises ValueError, naming the polygon id (and ring index), for NULL or
+    empty rings, a NULL ring or vertex, a ring of fewer than 4 vertices,
+    a ring that is not closed, and a polygon whose exterior spans >180
+    deg of longitude. Polygons must NOT cross the antimeridian (the GeoJSON
+    RFC 7946 contract: split seam-crossing shapes first) — the bbox
+    explode and the raw-lon ray cast both assume lon_min <= lon_max, so a
+    crossing polygon would match the wrong hemisphere.
     """
-    dim = polygons.select(F.col(polygon_id).alias("__pid"), "rings")
-    ext = F.col("rings")[0]
-    span = F.array_max(F.transform(ext, lambda p: p[0])) - F.array_min(
-        F.transform(ext, lambda p: p[0])
+    polys = [
+        (pid, _checked_rings(pid, rings))
+        for pid, rings in polygons.select(polygon_id, "rings").collect()
+    ]
+    # the dim needs only the exterior: polygons_with_tiles reads ring 0
+    dim = polygons.sparkSession.createDataFrame(
+        [(i, pid, [rs[0].tolist()]) for i, (pid, rs) in enumerate(polys)],
+        StructType([
+            StructField("__idx", IntegerType(), False),
+            StructField("__pid", polygons.schema[polygon_id].dataType),
+            StructField("rings", ArrayType(ArrayType(ArrayType(DoubleType())))),
+        ]),
     )
-    offender = dim.where(span > 180.0).select("__pid").first()
-    if offender is not None:
-        raise ValueError(
-            f"pip_join: polygon {offender[0]!r} spans >180 deg of longitude — "
-            "it likely crosses the antimeridian; split it at the seam first "
-            "(RFC 7946 s3.1.9)"
-        )
     # private join-key names: a points frame that already carries
     # tile_x/tile_y (e.g. from this engine's own with_tile) must come out
     # of the join with those columns untouched
-    tiled_polys = polygons_with_tiles(dim, z).withColumnsRenamed(
-        {"tile_x": "__jtx", "tile_y": "__jty"}
+    tiled_polys = (
+        polygons_with_tiles(dim, z)
+        .drop("rings")
+        .withColumnsRenamed({"tile_x": "__jtx", "tile_y": "__jty"})
     )
     pts = points.withColumns(
         {"__jtx": tile_x(F.col(lon), z), "__jty": tile_y(F.col(lat), z)}
     )
-    coarse = pts.join(F.broadcast(tiled_polys), ["__jtx", "__jty"]).drop(
-        "__jtx", "__jty"
+    inside = _inside_predicate([ring_edges(rs) for _, rs in polys])
+    return (
+        pts.join(F.broadcast(tiled_polys), ["__jtx", "__jty"])
+        .where(inside(F.col(lon), F.col(lat), F.col("__idx")))
+        .drop("__jtx", "__jty", "__idx")
+        .withColumnRenamed("__pid", polygon_id)
     )
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in coarse.schema.fields
-        if f.name != "rings"
-    )
-    refined = coarse.mapInPandas(_make_refine_pip(lon, lat), schema=out_schema)
-    return refined.withColumnRenamed("__pid", polygon_id)
 
 
 def knn_join(

@@ -101,3 +101,25 @@ def jobs_run_by(spark, build):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def python_bytes_sent(df: DataFrame) -> int:
+    """Bytes the executed plan of ``df`` sent to Python workers (the
+    "data sent to Python workers" SQL metric, summed over every node).
+    Read after an action has run ``df``; AQE stages are walked into."""
+    total, stack = 0, [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if kind.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        sent = node.metrics().get("pythonDataSent")
+        if sent.isDefined():
+            total += sent.get().value()
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return total

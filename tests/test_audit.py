@@ -186,20 +186,22 @@ def test_minhash_signatures_single_exchange(spark):
     assert len(re.findall(r"\bExchange RoundRobin", plan)) <= 1, plan
 
 
-def test_salted_cap_exchanges(spark):
-    """The two-phase cap's first exchange must include the salt (that is
-    what bounds per-task input on a metro tile); the exact re-rank then
-    exchanges on the bare tile key."""
-    import re
-
+@pytest.mark.parametrize("cap", [
+    lambda f: tiling.cap_features_per_tile(f, 100),
+    lambda f: tiling.cap_tile_bytes(f, 256),
+    lambda f: tiling.encode_tiles(f, max_per_tile=100, single_layer="c"),
+    # above Spark's default windowGroupLimitThreshold (1000)
+    lambda f: tiling.cap_features_per_tile(f, 100_000),
+], ids=["cap_features_per_tile", "cap_tile_bytes", "encode_tiles", "cap_100k"])
+def test_cap_partial_limit_below_first_shuffle(spark, cap):
+    """The hot-tile guard: a map-side WindowGroupLimit Partial sits below
+    the first exchange over the raw rows, so each map task ships at most
+    N rows of a metro tile instead of all of them."""
     cust = spark.read.parquet(f"{SF}/customer.parquet")
     pts = cust.select("c_custkey", lon_of(F.col("c_custkey")), lat_of(F.col("c_custkey")))
-    feats = tiling.point_features(pts, z=4, layer="c")
-    capped = tiling.cap_features_per_tile(feats, 100, salt_buckets=8)
-    plan = audit.plan_of(capped)
-    parts = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
-    assert any("__salt" in p for p in parts), parts
-    assert any("__salt" not in p and "tile_x" in p for p in parts), parts
+    feats = tiling.point_features(pts, z=4, layer="c", feature_id=F.col("c_custkey"))
+    capped = cap(feats)
+    assert audit.partial_limit_below_first_shuffles(capped), audit.plan_of(capped)
 
 
 def test_hll_sketch_two_shuffles_only(spark):
@@ -255,22 +257,6 @@ def test_focal_map_single_shuffle(spark):
     out = focal_map(rasters, op="grad")
     audit.assert_no_cartesian(out)
     assert audit.count_shuffles(out) == 1
-
-
-def test_byte_cap_salted_exchanges(spark):
-    """cap_tile_bytes mirrors the count cap's two-phase shape: first
-    exchange includes the salt (bounding a metro tile's byte mass per
-    task), the exact prefix re-rank exchanges on the bare tile key."""
-    import re
-
-    cust = spark.read.parquet(f"{SF}/customer.parquet")
-    pts = cust.select("c_custkey", lon_of(F.col("c_custkey")), lat_of(F.col("c_custkey")))
-    feats = tiling.point_features(pts, z=4, layer="c", feature_id=F.col("c_custkey"))
-    capped = tiling.cap_tile_bytes(feats, 256, salt_buckets=8)
-    plan = audit.plan_of(capped)
-    parts = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
-    assert any("__salt" in p for p in parts), parts
-    assert any("__salt" not in p and "tile_x" in p for p in parts), parts
 
 
 def test_hexbin_single_exchange_no_python(spark):
@@ -352,11 +338,9 @@ def test_plan_shards_bounded_exchanges(spark):
 
 
 def test_capped_encode_two_shuffles(spark):
-    """encode_tiles(max_per_tile=...) folds the cap's exact phase-2 window
-    into the encode repartition: exactly TWO shuffles total (the salted
-    phase-1 exchange + the tile repartition), not three — the r6 plan fix
-    (the literal tile_z must not re-insert an ENSURE_REQUIREMENTS
-    exchange between the repartition and the window)."""
+    """encode_tiles(max_per_tile=...) shuffles exactly TWICE: the cap
+    window's own exchange (map-side partial limit below it) and the
+    encode repartition on the tile key above the window."""
     cust = spark.read.parquet(f"{SF}/customer.parquet")
     pts = cust.select("c_custkey", lon_of(F.col("c_custkey")), lat_of(F.col("c_custkey")))
     feats = tiling.point_features(pts, z=6, layer="c")

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from vectortiles_spark.functions.tiles import tile_pixel_np, tile_xy_np
 from vectortiles_spark.mvt import codec
 from vectortiles_spark.operators import tiling
+from vectortiles_spark.plans import audit
 from vectortiles_spark.sources.synth import images_df, images_pdf
 
 Z = 8
@@ -95,16 +96,25 @@ def test_cap_features_per_tile(spark):
 
 def test_tile_stats_matches_plain_count(spark):
     imgs = images_df(spark, N, seed=42)
-    feats = tiling.point_features(imgs, z=Z, layer="images").cache()
-    salted = {
-        (r.tile_x, r.tile_y): r.n_features
-        for r in tiling.tile_stats(feats, salt_buckets=8).collect()
+    # three layers: the metro tiles carry all of them
+    feats = (
+        tiling.point_features(imgs, z=Z, feature_id=F.xxhash64("image_id"))
+        .withColumn("layer", F.concat(F.lit("l"), F.pmod("feature_id", F.lit(3))))
+        .cache()
+    )
+    stats = {
+        (r.tile_x, r.tile_y): (r.n_features, r.n_layers)
+        for r in tiling.tile_stats(feats).collect()
     }
     plain = {
-        (r.tile_x, r.tile_y): r.n
-        for r in feats.groupBy("tile_x", "tile_y").agg(F.count("*").alias("n")).collect()
+        (r.tile_x, r.tile_y): (r.n, r.n_layers)
+        for r in feats.groupBy("tile_x", "tile_y").agg(
+            F.count("*").alias("n"), F.countDistinct("layer").alias("n_layers")
+        ).collect()
     }
-    assert salted == plain
+    assert stats == plain
+    assert max(n for _, n in stats.values()) == 3
+    feats.unpersist()
 
 
 def test_multi_layer_tile(spark):
@@ -297,15 +307,12 @@ def test_tile_pyramid_rollup(spark):
 
 
 def test_salted_cap_identical_to_single_phase(spark):
-    """The salted two-phase cap must keep exactly the rows the one-window
-    cap keeps, with the hot tile spread over (tile, salt) tasks in phase 1
-    (no task materializes the uncapped tile)."""
-    import re
-
+    """The cap keeps exactly each tile's first 1,000 feature_ids on a
+    skewed frame: one metro tile with 90% of 200K rows plus a long tail
+    of cold tiles, checked against a pandas first-N."""
     n_hot = 200_000
     df = spark.range(n_hot).select(
         F.lit(5).alias("tile_z"),
-        # one metro tile with 90% of rows + a long tail of cold tiles
         F.when(F.col("id") % 10 < 9, F.lit(7)).otherwise(
             (F.col("id") % 31).cast("int")
         ).alias("tile_x"),
@@ -313,16 +320,11 @@ def test_salted_cap_identical_to_single_phase(spark):
         F.lit("layer0").alias("layer"),
         F.col("id").alias("feature_id"),
     )
-    salted = tiling.cap_features_per_tile(df, 1000, salt_buckets=16)
-    plain = tiling.cap_features_per_tile(df, 1000, salt_buckets=0)
-    a = {(r.tile_x, r.feature_id) for r in salted.collect()}
-    b = {(r.tile_x, r.feature_id) for r in plain.collect()}
-    assert a == b and len(a) > 1000
-    # plan audit: the first window's exchange must partition by the salt
-    # (that is what bounds per-task input on the hot tile)
-    plan = salted._jdf.queryExecution().executedPlan().toString()
-    exchanges = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
-    assert any("__salt" in e for e in exchanges), exchanges
+    pdf = df.toPandas().sort_values("feature_id")
+    want = pdf.groupby("tile_x").head(1000)
+    got = {(r.tile_x, r.feature_id) for r in tiling.cap_features_per_tile(df, 1000).collect()}
+    assert got == set(zip(want.tile_x, want.feature_id))
+    assert len(got) > 1000
 
 
 def test_build_pyramid_all_zooms_roundtrip(spark):
@@ -417,21 +419,13 @@ def test_decode_tiles_extent_mismatch_raises(spark):
 
 
 def test_salted_cap_pathological_skew_10m_one_tile(spark):
-    """VERDICT r4 #7: the two-phase cap at the scale it exists for — 10M
-    rows ALL on one (tile, layer). Proves (a) exact first-N output, (b)
-    phase-1 survivors bounded at salt_buckets * max_per_tile, (c) the
-    phase-1 exchange key splits the hot tile near-uniformly (per-task
-    input ~ N / salt_buckets, not N), and (d) both walls recorded, with a
-    loose disaster guard. The structural bounds (b)/(c) are the scale
-    gate: they hold at ANY N by construction. Wall ordering is host- and
-    core-count-dependent (at local[32] the salted path measured 2.5x
-    faster — 1.14s vs 2.83s; at this fixture's local[4] the two extra
-    exchanges roughly offset the 4-way sort win), so the timing assert
-    only guards against the straggler pathology the cap exists to
-    prevent, not noise-level ordering."""
-    import time
-
-    N, cap, sb = 10_000_000, 1000, 16
+    """VERDICT r4 #7: the cap at the scale it exists for — 10M rows ALL
+    on one (tile, layer), in 32 map tasks. Proves (a) exact first-N
+    output and (b) the hot-tile bound, measured: the exchange over the
+    raw rows writes at most (map tasks x cap) rows, because each map task
+    applies its partial limit first. Without it, all 10M rows would reach
+    the one task that owns the tile."""
+    N, cap, tasks = 10_000_000, 1000, 32
     feats = (
         spark.range(N)
         .select(
@@ -439,59 +433,18 @@ def test_salted_cap_pathological_skew_10m_one_tile(spark):
             F.lit(5).alias("tile_y"), F.lit("hot").alias("layer"),
             F.col("id").alias("feature_id"),
         )
-        .repartition(32)
+        .repartition(tasks)
         .cache()
     )
-    feats.count()  # materialize outside the clocks
+    feats.count()  # materialize the 32 input partitions
     try:
-        # (c) structural bound: the phase-1 partition key (tile, layer,
-        # salt) caps any single group — and therefore any task's input for
-        # this tile — at ~N/sb rows (hash-uniform; 10% slack)
-        salt = F.pmod(F.xxhash64(F.col("feature_id")), F.lit(sb))
-        max_group = (
-            feats.withColumn("__s", salt).groupBy("__s").count()
-            .agg(F.max("count")).collect()[0][0]
-        )
-        assert max_group <= int(N / sb * 1.10), max_group
-
-        # (b) phase-1 survivors: full per-salt quota, nothing more
-        from pyspark.sql import Window
-
-        w1_survivors = (
-            feats.withColumn("__salt", salt)
-            .withColumn("__rn", F.row_number().over(
-                Window
-                .partitionBy("tile_z", "tile_x", "tile_y", "layer", "__salt")
-                .orderBy("feature_id")))
-            .filter(F.col("__rn") <= cap)
-            .count()
-        )
-        assert w1_survivors == sb * cap, w1_survivors
-
-        def wall(salt_buckets):
-            best = float("inf")
-            for _ in range(2):  # best-of-2 damps host window noise
-                t0 = time.perf_counter()
-                n = tiling.cap_features_per_tile(
-                    feats, cap, salt_buckets=salt_buckets
-                ).count()
-                best = min(best, time.perf_counter() - t0)
-                assert n == cap
-            return best
-
-        w_salted = wall(sb)
-        w_single = wall(1)
+        capped = tiling.cap_features_per_tile(feats, cap)
         # (a) exact output (first N feature_ids)
-        got = sorted(
-            r.feature_id
-            for r in tiling.cap_features_per_tile(feats, cap, salt_buckets=sb).collect()
-        )
+        got = sorted(r.feature_id for r in capped.collect())
         assert got == list(range(cap))
-        # (d) disaster guard only (see docstring): a broken two-phase
-        # shape would put all 10M rows through one task TWICE
-        assert w_salted < w_single * 3.0, (w_salted, w_single)
-        print(f"salted={w_salted:.2f}s single-window={w_single:.2f}s "
-              f"max_salt_group={max_group} survivors={w1_survivors}")
+        # (b) shuffle records written by the first exchange
+        written = audit.first_shuffle_records(capped)
+        assert cap <= written <= tasks * cap, written
     finally:
         feats.unpersist()
 
@@ -715,16 +668,38 @@ def test_diff_tile_sets_plan_slims_before_join(spark):
 
 
 def test_cap_tile_bytes_matches_pandas_prefix(spark):
-    """Salted and unsalted byte caps both equal the pandas running-sum
-    prefix rule on random data."""
+    """The byte cap equals the pandas running-sum prefix rule, on random
+    data and on the tight cases of its rank pre-filter
+    (``row_number() <= max_bytes // 2``): 2-byte features keep exactly
+    max_bytes // 2 per tile, 5-byte packed points max_bytes // 5."""
     import numpy as np
     import pandas as pd
 
     from vectortiles_spark.operators.tiling import cap_tile_bytes
 
+    def vlen(v):
+        return 1 if v < 128 else (2 if v < 1 << 14 else (3 if v < 1 << 21 else 4))
+
+    def cost(row):
+        if "geom_pt" in row:
+            cmds = [9, row["geom_pt"] >> 13, row["geom_pt"] & ((1 << 13) - 1)]
+        else:
+            cmds = row["geom_cmds"] if row["geom_cmds"] is not None else []
+        p = sum(vlen(v) for v in cmds)
+        return p + vlen(p) + 1
+
+    def check(pdf, budget, schema=None):
+        pdf = pdf.sort_values("feature_id")
+        run = pdf.apply(cost, axis=1).groupby([pdf.tile_x, pdf.tile_y]).cumsum()
+        exp = set(pdf[run <= budget]["feature_id"])
+        df = spark.createDataFrame(pdf, schema)
+        got = {r["feature_id"] for r in cap_tile_bytes(df, budget).collect()}
+        assert got == exp, budget
+        return pdf[pdf.feature_id.isin(got)].groupby(["tile_x", "tile_y"]).size()
+
     rng = np.random.RandomState(17)
     n = 400
-    pdf = pd.DataFrame({
+    check(pd.DataFrame({
         "tile_z": 3,
         "tile_x": rng.randint(0, 3, n),
         "tile_y": rng.randint(0, 2, n),
@@ -734,27 +709,29 @@ def test_cap_tile_bytes_matches_pandas_prefix(spark):
             [9, int(a), int(b)]
             for a, b in zip(rng.randint(0, 8192, n), rng.randint(0, 200000, n))
         ],
+    }), 60)
+
+    # 2 bytes each: an empty stream, and a NULL one (costed as empty)
+    empty = pd.DataFrame({
+        "tile_z": 3, "tile_x": np.arange(200) % 2, "tile_y": 0, "layer": "l",
+        "feature_id": np.arange(200),
+        "geom_cmds": [None if i % 7 == 0 else [] for i in range(200)],
     })
-    df = spark.createDataFrame(pdf)
+    schema = (
+        "tile_z int, tile_x int, tile_y int, layer string, feature_id bigint, "
+        "geom_cmds array<bigint>"
+    )
+    for budget in (64, 65):
+        assert check(empty, budget, schema).tolist() == [32, 32], budget
 
-    def vlen(v):
-        return 1 if v < 128 else (2 if v < 1 << 14 else (3 if v < 1 << 21 else 4))
-
-    def cost(cmds):
-        p = sum(vlen(v) for v in cmds)
-        return p + vlen(p) + 1
-
-    pdf["__b"] = pdf["geom_cmds"].map(cost)
-    pdf = pdf.sort_values("feature_id")
-    pdf["__run"] = pdf.groupby(["tile_x", "tile_y"])["__b"].cumsum()
-    budget = 60
-    exp = set(pdf[pdf["__run"] <= budget]["feature_id"])
-    for buckets in (1, 16):
-        got = {
-            r["feature_id"]
-            for r in cap_tile_bytes(df, budget, salt_buckets=buckets).collect()
-        }
-        assert got == exp, buckets
+    # 5 bytes each: payload 3 (header, zx=3, zy=4) + length varint + tag
+    packed = pd.DataFrame({
+        "tile_z": 3, "tile_x": 0, "tile_y": 0,
+        "feature_id": np.arange(100), "geom_pt": (3 << 13) | 4,
+    })
+    for budget in (4, 5, 64, 65):
+        kept = check(packed, budget)
+        assert kept.sum() == budget // 5, budget
 
 
 def test_cap_tile_bytes_oversized_feature_drops(spark):

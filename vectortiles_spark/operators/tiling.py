@@ -224,61 +224,33 @@ def geom_features(
     return base.mapInArrow(encode, out_schema)
 
 
-def cap_features_per_tile(
-    features: DataFrame,
-    max_per_tile: int,
-    order_by: str = "feature_id",
-    salt_buckets: int = 16,
-    pre_phase2=None,
-) -> DataFrame:
-    """Deterministic hot-tile bound: keep the first `max_per_tile` features
-    per (tile, layer) by `order_by`, SALTED two-phase (SURVEY.md §2.D10).
-
-    A single window over the tile key would land an uncapped metro tile on
-    one task before the cap applies — the straggler the cap exists to
-    prevent. Phase 1 windows over (tile, layer, salt): each task sees at
-    most rows/salt_buckets of the hottest tile and keeps its per-salt
-    first `max_per_tile` (the global first-N is a subset of every salt's
-    first-N, so nothing needed survives outside the quota). Phase 2
-    re-ranks the <= salt_buckets * max_per_tile survivors exactly —
-    bounded input, and byte-identical output to the single-phase window
-    when `order_by` is a key (pinned by tests/test_tiling_e2e.py). The
-    downstream encode of a capped tile is likewise bounded at
-    max_per_tile rows per task. ``salt_buckets<=1`` keeps the one-window
-    path.
-
-    ``pre_phase2`` (optional, DataFrame -> DataFrame) is applied to the
-    phase-1 survivors BEFORE the exact phase-2 window. A caller that
-    immediately tile-partitions the output anyway (encode_tiles) passes
-    its repartition here: hash(tile) clusters every (tile[, layer])
-    window group, so phase 2 rides that exchange instead of adding its
-    own — one fewer full shuffle (guide §2.4), with the salted phase 1
-    still bounding what any post-exchange task sees of a hot tile."""
+def _tile_window(features: DataFrame) -> Window:
+    """The caps' window: one group per (tile[, layer]), ordered by the
+    feature key ``feature_id``."""
     part_cols = ["tile_z", "tile_x", "tile_y"] + (["layer"] if "layer" in features.columns else [])
-    w = Window.partitionBy(*part_cols).orderBy(F.col(order_by))
-    if not salt_buckets or salt_buckets <= 1:
-        capped = (
-            features.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= max_per_tile)
-            .drop("__rn")
-        )
-        return pre_phase2(capped) if pre_phase2 is not None else capped
-    # salt from the order key itself: deterministic under retries and
-    # independent of partition layout
-    salt = F.pmod(F.xxhash64(F.col(order_by)), F.lit(salt_buckets))
-    w1 = Window.partitionBy(*part_cols, "__salt").orderBy(F.col(order_by))
-    pre = (
-        features.withColumn("__salt", salt)
-        .withColumn("__rn", F.row_number().over(w1))
+    return Window.partitionBy(*part_cols).orderBy(F.col("feature_id"))
+
+
+def cap_features_per_tile(features: DataFrame, max_per_tile: int) -> DataFrame:
+    """Deterministic hot-tile bound: keep the first `max_per_tile` features
+    per (tile, layer) by ``feature_id`` (SURVEY.md §2.D10).
+
+    One ``row_number() <= max_per_tile`` window. Spark plans it as a
+    map-side ``WindowGroupLimit … Partial``, the exchange, then
+    ``WindowGroupLimit … Final`` (SPARK-37099): each map task ships at
+    most `max_per_tile` rows of a tile, so the task that owns a metro tile
+    reads at most (map tasks × max_per_tile) of its rows, never the
+    uncapped tile. A tile's global first N are among every map task's
+    first N, so the output is exact. Spark inserts the partial limit for
+    N up to ``spark.sql.optimizer.windowGroupLimitThreshold``, which
+    ``get_spark`` lifts. The partial limit only sits below an exchange the
+    window plans itself: repartition after the cap, not before it (plan
+    pinned by tests/test_audit.py). ``feature_id`` must be a key for
+    byte-deterministic output."""
+    return (
+        features.withColumn("__rn", F.row_number().over(_tile_window(features)))
         .filter(F.col("__rn") <= max_per_tile)
         .drop("__rn")
-    )
-    if pre_phase2 is not None:
-        pre = pre_phase2(pre)
-    return (
-        pre.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= max_per_tile)
-        .drop("__rn", "__salt")
     )
 
 
@@ -301,7 +273,8 @@ def geometry_wire_bytes(features: DataFrame) -> F.Column:
     layer (first occurrence pays, the rest reference) so they are NOT
     additive per feature and are deliberately excluded. Pure Column
     algebra over ``geom_cmds`` (F.aggregate fold) or the packed
-    ``geom_pt`` single-point scalar."""
+    ``geom_pt`` single-point scalar. A NULL stream costs what an empty
+    one does (the sink drops both), so every value is >= 2 bytes."""
     if "geom_cmds" in features.columns:
         payload = F.aggregate(
             F.col("geom_cmds"),
@@ -317,69 +290,34 @@ def geometry_wire_bytes(features: DataFrame) -> F.Column:
         )
     else:
         raise ValueError(
-            "geometry_wire_bytes: features carry neither geom_cmds nor "
-            "geom_pt — pass bytes_col explicitly"
+            "geometry_wire_bytes: features carry neither geom_cmds nor geom_pt"
         )
+    payload = F.coalesce(payload, F.lit(0).cast("bigint"))
     return payload + varint_len(payload) + F.lit(1)
 
 
-def cap_tile_bytes(
-    features: DataFrame,
-    max_bytes: int,
-    order_by: str = "feature_id",
-    bytes_col: F.Column | None = None,
-    salt_buckets: int = 16,
-) -> DataFrame:
+def cap_tile_bytes(features: DataFrame, max_bytes: int) -> DataFrame:
     """BYTE-budget hot-tile bound (tippecanoe ``--maximum-tile-bytes``
-    analog): keep, per (tile, layer), the longest prefix by ``order_by``
-    whose RUNNING byte cost stays within ``max_bytes`` — so the emitted
-    tile's additive geometry footprint is bounded no matter how dense the
-    metro tile is. A single feature larger than the whole budget drops.
+    analog): keep, per (tile, layer), the longest prefix by ``feature_id``
+    whose RUNNING ``geometry_wire_bytes`` stays within ``max_bytes`` — so
+    the emitted tile's additive geometry footprint is bounded no matter
+    how dense the metro tile is. A single feature larger than the whole
+    budget drops. ``feature_id`` must be a key for byte-deterministic
+    output.
 
-    ``bytes_col`` is the per-feature cost (default:
-    ``geometry_wire_bytes``). Like cap_features_per_tile, ``order_by``
-    must be a key for byte-deterministic output.
-
-    Salted two-phase, same argument as the count cap: any feature in the
-    kept prefix has GLOBAL prefix cost <= max_bytes, and its PER-SALT
-    prefix is a subset of its global prefix, so its per-salt running sum
-    is also <= max_bytes and it survives phase 1. Phase 2 recomputes the
-    exact global running sum over survivors, whose per-salt byte mass is
-    bounded at max_bytes each — so the hottest tile costs any single
-    task at most salt_buckets * max_bytes bytes instead of its full
-    uncapped mass."""
-    part_cols = ["tile_z", "tile_x", "tile_y"] + (
-        ["layer"] if "layer" in features.columns else []
-    )
-    cost = bytes_col if bytes_col is not None else geometry_wire_bytes(features)
-    feats = features.withColumn("__bytes", cost)
-    w = (
-        Window.partitionBy(*part_cols)
-        .orderBy(F.col(order_by))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    if not salt_buckets or salt_buckets <= 1:
-        return (
-            feats.withColumn("__run", F.sum("__bytes").over(w))
-            .filter(F.col("__run") <= max_bytes)
-            .drop("__bytes", "__run")
-        )
-    salt = F.pmod(F.xxhash64(F.col(order_by)), F.lit(salt_buckets))
-    w1 = (
-        Window.partitionBy(*part_cols, "__salt")
-        .orderBy(F.col(order_by))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pre = (
-        feats.withColumn("__salt", salt)
-        .withColumn("__run", F.sum("__bytes").over(w1))
-        .filter(F.col("__run") <= max_bytes)
-        .drop("__run")
-    )
+    A running ``sum`` window gets no map-side partial limit, so a
+    ``row_number() <= max_bytes // 2`` filter over the same window comes
+    first and carries it (see cap_features_per_tile). It drops nothing
+    the prefix keeps: every feature costs at least 2 bytes (tag byte +
+    length varint + a payload of >= 0), so the k-th kept feature has a
+    running cost >= 2k, and 2k <= max_bytes gives k <= max_bytes // 2."""
+    w = _tile_window(features).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return (
-        pre.withColumn("__run", F.sum("__bytes").over(w))
+        features.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= max_bytes // 2)
+        .withColumn("__run", F.sum(geometry_wire_bytes(features)).over(w))
         .filter(F.col("__run") <= max_bytes)
-        .drop("__bytes", "__run", "__salt")
+        .drop("__rn", "__run")
     )
 
 
@@ -738,24 +676,12 @@ def encode_tiles(
 
         partitions = python_partitions(features.sparkSession.sparkContext)
     if max_per_tile is not None:
-        # the cap's exact phase-2 window rides the encode repartition
-        # (hash(tile) clusters every window group): 2 cap exchanges + the
-        # encode exchange collapse to 2 total, while the salted phase 1
-        # still runs before anything is tile-partitioned (hot-tile guard).
-        # Partition by (tile_x, tile_y) only: a subset of the window's
-        # clustering keys still satisfies it, whereas tile_z is a literal
-        # in single-zoom pipelines — the optimizer prunes it from the
-        # window spec but NOT from the repartition expression, and that
-        # mismatch re-inserts the exchange this fold removes
-        features = cap_features_per_tile(
-            features,
-            max_per_tile,
-            pre_phase2=lambda df: df.repartition(
-                partitions, F.col("tile_x"), F.col("tile_y")
-            ),
-        )
-    else:
-        features = features.repartition(partitions, *key)
+        # cap BEFORE the encode repartition: the cap's window then plans
+        # its own exchange with the map-side partial limit below it (the
+        # hot-tile guard). Under a repartition the window would get only
+        # its Final limit, after the whole hot tile reached one task
+        features = cap_features_per_tile(features, max_per_tile)
+    features = features.repartition(partitions, *key)
     sort_cols = [c for c in ("layer", "geom_type", "feature_id") if c in features.columns]
     ordered = features.sortWithinPartitions(*key, *[F.col(c) for c in sort_cols])
     return ordered.mapInArrow(
@@ -920,31 +846,17 @@ def decode_tiles(
     return tiles.select("tile_z", "tile_x", "tile_y", "mvt").mapInArrow(run, FEATURE_SCHEMA)
 
 
-def tile_stats(features: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """Per-tile feature counts via SALTED two-phase aggregation.
+def tile_stats(features: DataFrame) -> DataFrame:
+    """Per-tile feature and distinct-layer counts.
 
-    Demonstrates the skew treatment for hot-tile aggregates (SURVEY.md
-    §2.D10): partial aggregate on (tile, salt) spreads a metro tile across
-    `salt_buckets` reducers, then a cheap second aggregate merges the
-    partials. (For simple counts Spark's map-side partial agg already does
-    this; the explicit form is the template for non-algebraic aggregates.)
-    """
-    salted = features.withColumn(
-        "__salt", F.pmod(F.hash(F.col("feature_id")), F.lit(salt_buckets))
-    )
-    partial = salted.groupBy("tile_z", "tile_x", "tile_y", "__salt").agg(
-        F.count("*").alias("partial_n"),
-        # distinct-layer STATE (not a count) so the merge is exact: a layer
-        # split across salt buckets must not be undercounted. Layer
-        # cardinality per tile is tiny (a handful of names), so the set is
-        # cheap to carry
-        F.collect_set("layer").alias("partial_layer_set"),
-    )
-    return partial.groupBy("tile_z", "tile_x", "tile_y").agg(
-        F.sum("partial_n").alias("n_features"),
-        F.size(
-            F.array_distinct(F.flatten(F.collect_list("partial_layer_set")))
-        ).alias("n_layers"),  # exact (set-union merge), not an approximation
+    One groupBy: Spark's map-side partial aggregation (``partial_count``,
+    ``partial_collect_set``) collapses each map task's rows of a hot tile
+    to one buffer before the exchange, so no task receives a metro tile's
+    raw rows (SURVEY.md §2.D10). Layer names per tile are few, so the set
+    buffer stays small."""
+    return features.groupBy("tile_z", "tile_x", "tile_y").agg(
+        F.count("*").alias("n_features"),
+        F.size(F.collect_set("layer")).alias("n_layers"),
     )
 
 

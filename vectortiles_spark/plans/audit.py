@@ -82,6 +82,66 @@ def count_shuffles(df: DataFrame) -> int:
     )
 
 
+def _walk(*roots):
+    """Every physical node under ``roots``, top down, walking into AQE's
+    current plan and its query stages."""
+    stack = list(roots)
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if kind.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        yield node
+        stack.extend(_children(node))
+
+
+def _children(node) -> list:
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _is_shuffle(node) -> bool:
+    return node.getClass().getSimpleName() == "ShuffleExchangeExec"
+
+
+def _first_shuffles(df: DataFrame) -> list:
+    """The shuffles of ``df``'s executed plan with no shuffle below them:
+    the ones that ship its source rows."""
+    return [
+        node for node in _walk(df._jdf.queryExecution().executedPlan())
+        if _is_shuffle(node) and not any(map(_is_shuffle, _walk(*_children(node))))
+    ]
+
+
+def partial_limit_below_first_shuffles(df: DataFrame) -> bool:
+    """Every shuffle that ships ``df``'s source rows has a map-side
+    ``WindowGroupLimit … Partial`` below it, so each map task sends at
+    most the limit's rows per window group (SPARK-37099)."""
+    firsts = _first_shuffles(df)
+    return bool(firsts) and all(
+        any(
+            node.getClass().getSimpleName() == "WindowGroupLimitExec"
+            and node.mode().toString() == "Partial"
+            for node in _walk(*_children(first))
+        )
+        for first in firsts
+    )
+
+
+def first_shuffle_records(df: DataFrame) -> int:
+    """Rows written by the shuffles that ship ``df``'s source rows (the
+    "shuffle records written" SQL metric). Read after an action has run
+    ``df``."""
+    return sum(
+        node.metrics().get("shuffleRecordsWritten").get().value()
+        for node in _first_shuffles(df)
+    )
+
+
 def has_whole_stage_codegen(df: DataFrame) -> bool:
     # AQE prints an unexpanded AdaptiveSparkPlan in toString(); the codegen
     # explain mode shows the compiled subtrees regardless
@@ -107,19 +167,9 @@ def python_bytes_sent(df: DataFrame) -> int:
     """Bytes the executed plan of ``df`` sent to Python workers (the
     "data sent to Python workers" SQL metric, summed over every node).
     Read after an action has run ``df``; AQE stages are walked into."""
-    total, stack = 0, [df._jdf.queryExecution().executedPlan()]
-    while stack:
-        node = stack.pop()
-        kind = node.getClass().getSimpleName()
-        if kind == "AdaptiveSparkPlanExec":
-            stack.append(node.executedPlan())
-            continue
-        if kind.endswith("QueryStageExec"):
-            stack.append(node.plan())
-            continue
+    total = 0
+    for node in _walk(df._jdf.queryExecution().executedPlan()):
         sent = node.metrics().get("pythonDataSent")
         if sent.isDefined():
             total += sent.get().value()
-        kids = node.children()
-        stack.extend(kids.apply(i) for i in range(kids.size()))
     return total

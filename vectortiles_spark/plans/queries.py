@@ -1943,7 +1943,7 @@ def q_cap_tile_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = tiling.point_features(
         pts, z=3, layer="customers", feature_id=F.col("c_custkey")
     )
-    capped = tiling.cap_tile_bytes(feats, max_bytes=64, order_by="feature_id")
+    capped = tiling.cap_tile_bytes(feats, max_bytes=64)
     return (
         capped.withColumn("__b", tiling.geometry_wire_bytes(capped))
         .groupBy("tile_x", "tile_y")

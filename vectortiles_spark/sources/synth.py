@@ -6,7 +6,7 @@ Schema (exact, FIXTURES.md §B1):
 
 Geo distribution is a skew mixture: ~80% of rows cluster in a handful of
 dense "metro" hot-spots (tight Gaussians) and ~20% are uniform — this is
-what exercises the hot-tile salting path (SURVEY.md §2.D10).
+what exercises the hot-tile caps (SURVEY.md §2.D10).
 
 Generation is FULLY DISTRIBUTED and ROW-ADDRESSED: every random draw is a
 counter-based hash (splitmix64) of (seed, row_id, stream), so row i is

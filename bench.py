@@ -434,9 +434,9 @@ def main():
         )
     except Exception:  # noqa: BLE001
         pass
-    # overzoom parity datum: derive roads.mvt's 4 children (decode + clip +
+    # overzoom parity datum: derive roads.mvt's 4 children (parse + clip +
     # batch re-encode) and a dense 5k-single-point tile (the sink-shaped hot
-    # case, batched lane) — same guard policy as the decode/encode datum
+    # case, vectorized point split) — same guard policy as the decode/encode datum
     overzoom_roads_ms = None
     overzoom_pts_kfeat_s = None
     try:

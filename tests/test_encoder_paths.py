@@ -7,9 +7,10 @@ tiles decode to what the reference-validated single-process codec says."""
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 
-from vectortiles_spark.mvt import codec
+from vectortiles_spark.mvt import codec, wire
 from vectortiles_spark.operators.tiling import _encode_stream
 
 
@@ -208,3 +209,77 @@ def test_null_meta_tile_leaves_other_tiles_bytes():
     assert (999, 999) in b
     for key, mvt in a.items():
         assert b[key] == mvt, f"tile {key}: bytes differ between batch layouts"
+
+
+# metadata columns for the kernel-vs-reference test: two string columns
+# that share values, 64-bit ints past 2^53 and doubles with both zeros
+_KERNEL_COLS = {
+    "name": (codec.VAL_STRING, pa.string(), ["a", "b", "x", "long caption " * 12]),
+    "alias": (codec.VAL_STRING, pa.string(), ["b", "x", "y"]),
+    "big": (codec.VAL_INT, pa.int64(), [2**53, 2**53 + 1, -(2**60), 7]),
+    "d": (codec.VAL_DOUBLE, pa.float64(), [0.0, -0.0, 1.5]),
+}
+
+
+@pytest.mark.parametrize("keys", [
+    (), ("d",), ("name", "alias"), ("alias", "big", "d"), ("name", "alias", "big"),
+], ids=lambda keys: "-".join(keys) or "none")
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_kernel_bytes_equal_reference_encoder(keys, seed):
+    """Every (tile, layer) run the batch kernel writes is byte-identical to
+    encode_layer_from_streams over the same features: keys only where a
+    feature uses them, one value table shared by all keys, both in
+    first-appearance order — whole-run NULL columns, NULL first columns,
+    shared values, 0.0 / -0.0 and ints >= 2^53 included."""
+    rng = np.random.Generator(np.random.PCG64(seed))
+    rows = {c: [] for c in ("tz", "tx", "ty", "layer", "fid", "gt", "stream")}
+    vals = {k: [] for k in keys}
+    want = {}
+    for t in range(int(rng.integers(1, 12))):
+        tile = (9, t, 3)
+        for layer in sorted(rng.choice(["a", "b", "c"], int(rng.integers(1, 4)), replace=False)):
+            dead = {k for k in keys if rng.random() < 0.3}  # NULL across the run
+            feats = []
+            for _ in range(int(rng.integers(1, 40))):
+                gt = int(rng.integers(1, 3))
+                x, y = (int(v) for v in rng.integers(0, 4096, 2))
+                stream = [9, x << 1, y << 1] + ([10, 2, 2] if gt == 2 else [])
+                meta = {}
+                for k in keys:
+                    tag, _, pool = _KERNEL_COLS[k]
+                    v = None if k in dead or rng.random() < 0.3 else pool[rng.integers(len(pool))]
+                    vals[k].append(v)
+                    if v is not None:
+                        meta[k] = (tag, v)
+                feats.append((int(rng.integers(-2**62, 2**62)), meta, gt, stream))
+            # the kernel takes rows in the sink's (geom_type, feature_id) order
+            order = sorted(range(len(feats)), key=lambda i: (feats[i][2], feats[i][0]))
+            for k in keys:
+                run = vals[k][-len(feats):]
+                vals[k][-len(feats):] = [run[i] for i in order]
+            feats = [feats[i] for i in order]
+            for fid, _, gt, stream in feats:
+                for c, v in zip(rows, (*tile, layer, fid, gt, stream)):
+                    rows[c].append(v)
+            want[tile] = want.get(tile, b"") + wire.len_delimited(3, codec.encode_layer_from_streams(
+                layer, [(f, m, g, np.asarray(st, np.uint32)) for f, m, g, st in feats]
+            ))
+    meta_cols = []
+    for k in keys:
+        tag, typ, _ = _KERNEL_COLS[k]
+        d = pa.array(vals[k], typ).dictionary_encode()
+        codes = pc.fill_null(d.indices, -1).to_numpy(zero_copy_only=False).astype(np.int64)
+        meta_cols.append((k, codes, *codec.frame_values_vec(tag, d.dictionary)))
+    lnames = ["a", "b", "c"]
+    lens = [len(st) for st in rows["stream"]]
+    mvts, starts, _ = codec.encode_multi_tile_batch(
+        *(np.asarray(rows[c], np.int64) for c in ("tz", "tx", "ty")),
+        np.array([lnames.index(l) for l in rows["layer"]], np.int64), lnames,
+        np.asarray(rows["fid"], np.int64), np.asarray(rows["gt"], np.int64),
+        np.concatenate([np.asarray(st, np.uint32) for st in rows["stream"]]),
+        np.concatenate([[0], np.cumsum(lens)]).astype(np.int64), meta_cols,
+    )
+    got = {(9, rows["tx"][i], 3): m for i, m in zip(starts.tolist(), mvts)}
+    assert got.keys() == want.keys()
+    for tile in want:
+        assert got[tile] == want[tile], tile

@@ -8,13 +8,15 @@ placement, plus decode-cleanliness of every emitted blob.
 """
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from vectortiles_spark.mvt import codec
+from vectortiles_spark.mvt import codec, wire
 from vectortiles_spark.mvt.geometry import GEOM_LINESTRING, GEOM_POINT, GEOM_POLYGON
 from vectortiles_spark.operators.clip import clip_polygon_exact, clip_polyline
 from vectortiles_spark.operators.overzoom import overzoom_blob, overzoom_tiles
+from vectortiles_spark.operators.tiling import _encode_stream
 
 ROADS = "/root/reference/test/roads.mvt"
 
@@ -165,9 +167,19 @@ def test_roads_conservation_vs_clipped_parent():
 
 
 def test_overzoom_validation_and_malformed():
+    from vectortiles_spark.operators.overzoom import overzoom_blob_scalar
+
     parent = codec.encode_tile([_pts_layer("p", [(1, [[5, 5]])])])
     with pytest.raises(ValueError, match="levels"):
         overzoom_blob(parent, levels=0)
+    # a negative buffer would shrink every child box and drop the points
+    # on its edge (x = 2047 -> 4094 lies outside [0, 4096 - 8])
+    edge = codec.encode_tile([_pts_layer("p", [(1, [[2047, 5]]), (2, [[5, 5]])])])
+    for fn in (overzoom_blob, overzoom_blob_scalar):
+        with pytest.raises(ValueError, match="buffer_px"):
+            fn(edge, buffer_px=-8)
+    with pytest.raises(ValueError, match="buffer_px"):
+        overzoom_tiles(None, buffer_px=-8)  # checked on the driver, before any job
     with pytest.raises(ValueError):
         overzoom_blob(b"not a tile")
     with pytest.raises(ValueError):
@@ -224,6 +236,81 @@ def _roads() -> bytes:
         return f.read()
 
 
+def _sink_tile(rows) -> bytes:
+    """One tile written by the tile sink's stream encoder (the kernel):
+    rows of (feature_id, [x, y], caption, score), layer "im"."""
+    n = len(rows)
+    (out,) = _encode_stream(iter([pa.record_batch({
+        "tile_z": pa.array([5] * n, pa.int32()), "tile_x": pa.array([1] * n, pa.int32()),
+        "tile_y": pa.array([2] * n, pa.int32()), "layer": pa.array(["im"] * n),
+        "geom_type": pa.array([GEOM_POINT] * n, pa.int32()),
+        "feature_id": pa.array([r[0] for r in rows], pa.int64()),
+        "geom_cmds": pa.array([[9, x << 1, y << 1] for _, (x, y), _, _ in rows],
+                              pa.list_(pa.int64())),
+        "caption": pa.array([r[2] for r in rows], pa.string()),
+        "score": pa.array([r[3] for r in rows], pa.int64()),
+    })]))
+    return out["mvt"][0].as_py()
+
+
+def _sink_two_key(n=320, seed=3):
+    """The point sink's shape: every feature carries a string and an int
+    key; > 128 distinct values push value indices past one varint byte."""
+    rng = np.random.default_rng(seed)
+    return _sink_tile([
+        (i + 1, rng.integers(0, 4096, 2).tolist(), f"caption {i}", int(i % 3))
+        for i in range(n)
+    ])
+
+
+def _null_first_key():
+    """Sink tile whose first feature has a NULL caption: keys come out
+    (score, caption), so later features carry non-monotone key indices
+    [1, v, 0, w] and the parent takes the scalar fallback."""
+    rng = np.random.default_rng(4)
+    return _sink_tile([
+        (i + 1, rng.integers(0, 4096, 2).tolist(), None if i == 0 else f"c{i % 7}", i % 4)
+        for i in range(40)
+    ])
+
+
+def _repeated_key():
+    """Hand-built layer with a feature tagged [0, 0, 0, 1]: key 0 twice;
+    decode_tile keeps the last value."""
+    feats = b""
+    for fid, tags, (x, y) in ((1, [0, 0, 0, 1], (10, 10)), (2, [0, 1], (3000, 40))):
+        body = wire.tag_bytes(1, wire.WT_VARINT) + wire.encode_varint(fid)
+        body += wire.packed_uint32(2, np.array(tags, np.uint32))
+        body += wire.tag_bytes(3, wire.WT_VARINT) + wire.encode_varint(GEOM_POINT)
+        body += wire.packed_uint32(4, np.array([9, x << 1, y << 1], np.uint32))
+        feats += wire.len_delimited(2, body)
+    layer = (
+        wire.len_delimited(1, b"rk") + feats + wire.len_delimited(3, b"k")
+        + wire.len_delimited(4, codec.encode_value_bytes(codec.VAL_STRING, "a"))
+        + wire.len_delimited(4, codec.encode_value_bytes(codec.VAL_STRING, "b"))
+        + wire.tag_bytes(5, wire.WT_VARINT) + wire.encode_varint(4096)
+        + wire.tag_bytes(15, wire.WT_VARINT) + wire.encode_varint(2)
+    )
+    return wire.len_delimited(3, layer)
+
+
+def _two_key_mixed():
+    lay = codec.Layer("mixed")
+    ring = np.array([[500, 500], [3500, 500], [3500, 3500], [500, 3500], [500, 500]])
+    geoms = [
+        (GEOM_POINT, np.array([[100, 100]], np.int64)),
+        (GEOM_POINT, np.array([[3000, 3000], [1000, 3900]], np.int64)),
+        (GEOM_LINESTRING, [np.array([[100, 2000], [4000, 2100]])]),
+        (GEOM_POLYGON, [[ring]]),
+        (GEOM_POINT, np.array([[2048, 2048]], np.int64)),
+    ]
+    for i, (gt, geom) in enumerate(geoms):
+        lay.features.append(_feat(
+            i + 1, gt, geom, {"name": (1, f"n{i % 2}"), "rank": (5, i % 3)}
+        ))
+    return lay
+
+
 def _diff_cases():
     rng = np.random.default_rng(1)
     lay = codec.Layer("pts")
@@ -254,6 +341,11 @@ def _diff_cases():
     ))
     mp.features.append(_feat(2, GEOM_POINT, np.array([[200, 200]], np.int64), {"s": (1, "n")}))
     return {
+        "sink-two-key": (_sink_two_key(), 1, 0),
+        "sink-two-key-buf": (_sink_two_key(), 1, 8),
+        "null-first-key": (_null_first_key(), 1, 0),
+        "repeated-key": (_repeated_key(), 1, 0),
+        "two-key-mixed-geoms": (codec.encode_tile([_two_key_mixed()]), 1, 0),
         "roads-l1": (_roads, 1, 0),
         "roads-l2": (_roads, 2, 0),
         "roads-buf": (_roads, 1, 32),
@@ -268,7 +360,7 @@ def _diff_cases():
 
 @pytest.mark.parametrize("case", sorted(_diff_cases()))
 def test_batched_kernel_byte_identical_to_scalar(case):
-    """overzoom_blob (batched encode_multi_tile_batch lane + object
+    """overzoom_blob (vectorized encode_multi_tile_batch lane + scalar
     fallback) must emit byte-identical children to the pure object path,
     across metadata shapes, levels, buffers, and lane mixes."""
     from vectortiles_spark.operators.overzoom import overzoom_blob_scalar
@@ -280,3 +372,26 @@ def test_batched_kernel_byte_identical_to_scalar(case):
     c = overzoom_blob_scalar(blob, levels, buf)
     assert [x[:2] + x[3:] for x in a] == [x[:2] + x[3:] for x in c]
     assert [x[2] for x in a] == [x[2] for x in c]
+
+
+def test_two_key_sink_parents_stay_on_vectorized_lane(monkeypatch):
+    """Point-sink parents with two keys (small ones the wire parser reads
+    feature by feature, and big ones it reads as a batch) never reach the
+    scalar twin, and still match it byte for byte; a parent the gate
+    rejects does reach it."""
+    from vectortiles_spark.operators import overzoom
+
+    rng = np.random.default_rng(8)
+    parents = [_sink_two_key(n, seed=n) for n in (1, 3, 7, 40, 320)]
+    parents.append(_sink_tile([
+        (i + 1, rng.integers(0, 4096, 2).tolist(), "same", 0) for i in range(20)
+    ]))
+    want = [overzoom.overzoom_blob_scalar(p) for p in parents]
+
+    def fallback(*args, **kwargs):
+        raise AssertionError("scalar fallback reached")
+
+    monkeypatch.setattr(overzoom, "overzoom_blob_scalar", fallback)
+    assert [overzoom_blob(p) for p in parents] == want
+    with pytest.raises(AssertionError, match="fallback"):
+        overzoom_blob(_null_first_key())

@@ -10,9 +10,12 @@ in SURVEY.md §1.3 (verified against the reference's generated schema code,
 
 Encode-side canonicalization (stronger than the reference, which iterates
 HashMaps in unspecified order — Internal.hs:101-102, 321-329): layers are
-emitted sorted by name, dictionaries in first-appearance order, features
-points-first then linestrings then polygons (matching Internal.hs:123-125).
-The correctness gate is decode-to-identical-features, which both satisfy.
+emitted sorted by name, features points-first then linestrings then
+polygons (matching Internal.hs:123-125), and each layer carries the
+reference's totalMeta dictionaries — the keys its features use and one
+value table shared by all keys — in first-appearance order. Both encoders
+follow that one policy: the scalar encode_layer_from_streams and the batch
+kernel encode_multi_tile_batch write identical bytes for the same features.
 """
 
 from __future__ import annotations
@@ -578,6 +581,69 @@ def encode_layer_from_streams(
     return body
 
 
+def _shared_value_table(meta_cols):
+    """One value table for every metadata column, de-duplicated by framed
+    bytes (tag plus bit pattern, the identity _vkey gives a value).
+
+    Returns (id of each entry of the columns' tables laid end to end,
+    each column's first entry in that layout, unique framed buffer,
+    unique offsets)."""
+    import pyarrow as pa
+
+    data, starts, vbase = [np.zeros(0, np.uint8)], [np.zeros(0, np.int64)], []
+    pos = n_ent = 0
+    for _, _, fbuf, foff in meta_cols:
+        foff = np.asarray(foff, dtype=np.int64)
+        data.append(np.asarray(fbuf, dtype=np.uint8)[foff[0]:foff[-1]])
+        starts.append(foff[:-1] - foff[0] + pos)
+        pos += int(foff[-1] - foff[0])
+        vbase.append(n_ent)
+        n_ent += len(foff) - 1
+    off = np.concatenate(starts + [np.array([pos], np.int64)])
+    table = pa.Array.from_buffers(
+        pa.large_binary(), n_ent,
+        [None, pa.py_buffer(off), pa.py_buffer(np.concatenate(data))],
+    ).dictionary_encode()
+    uniq = table.dictionary
+    ubuf = uniq.buffers()[2]
+    return (
+        table.indices.to_numpy(zero_copy_only=False).astype(np.int64),
+        np.asarray(vbase, dtype=np.int64),
+        np.frombuffer(ubuf, np.uint8) if ubuf is not None else np.zeros(0, np.uint8),
+        np.frombuffer(
+            uniq.buffers()[1], np.int64, count=len(uniq) + 1, offset=uniq.offset * 8
+        ),
+    )
+
+
+def _first_appearance(run: np.ndarray, item: np.ndarray, k: int, n_runs: int):
+    """Per-run dictionaries in first-appearance order, vectorized with the
+    run-keyed-unique trick: unique(run * k + item) yields every run's item
+    set, a per-run permutation puts each segment in first-appearance order
+    and rank recovers each pair's local index.
+
+    For (run, item) pairs in order, returns each pair's index in its
+    run's dictionary, the dictionaries' items run after run, and each
+    run's entry count."""
+    k = max(k, 1)
+    u, first, inv = np.unique(run * k + item, return_index=True, return_inverse=True)
+    u_run = u // k
+    perm = np.lexsort((first, u_run))
+    rank = np.empty(len(u), dtype=np.int64)
+    rank[perm] = np.arange(len(u))
+    run_first = np.searchsorted(u_run, np.arange(n_runs))
+    return rank[inv] - run_first[run], u[perm] % k, np.bincount(u_run, minlength=n_runs)
+
+
+def _gather_runs(buf: np.ndarray, off: np.ndarray, items: np.ndarray, cnt: np.ndarray):
+    """Entries ``items`` of the table (buf, off) laid end to end, and the
+    byte length of each run's block of ``cnt`` entries."""
+    lens = off[items + 1] - off[items]
+    ecum = np.concatenate([[0], np.cumsum(lens)])
+    bounds = np.concatenate([[0], np.cumsum(cnt)])
+    return wire.ragged_gather(buf, off[items], lens), ecum[bounds[1:]] - ecum[bounds[:-1]]
+
+
 def encode_multi_tile_batch(
     tz: np.ndarray,
     tx: np.ndarray,
@@ -603,17 +669,16 @@ def encode_multi_tile_batch(
 
     meta_cols: [(key, codes_int64, framed_buf, framed_off)] — per-column
     dictionary codes over the batch plus the framed value bytes of the
-    dictionary (frame_values_vec). A code of -1 is NULL: that feature
-    carries no [key, value] pair for the column, and the value stays out
-    of the run's dictionary. The keys block lists every column in column
-    order; value blocks are per column.
+    dictionary (frame_values_vec); keys must be distinct. A code of -1 is
+    NULL: that feature carries no [key, value] pair for the column.
 
-    Per-run (tile, layer) value dictionaries are built vectorized with the
-    run-keyed-unique trick: unique(run_id * K + code) yields every run's
-    code set, a per-run permutation reorders each segment to
-    FIRST-APPEARANCE order (tile-local canonical), and rank/searchsorted
-    recover each row's local index — so tile bytes cannot depend on Arrow
-    batch layouts.
+    Each (tile, layer) run gets exactly the dictionaries
+    encode_layer_from_streams builds (the reference's totalMeta,
+    Internal.hs:321-329): the keys some feature of the run uses, and ONE
+    value table shared by every key, de-duplicated by framed value bytes.
+    Both are in first-appearance order over the run's (feature, column)
+    pairs taken row by row, so tile bytes cannot depend on Arrow batch
+    layouts or on how the caller split values into column dictionaries.
 
     Returns (list_of_mvt_bytes_per_tile, tile_starts_rows, n_runs_per_tile)
     aligned with the unique tiles in row order.
@@ -635,70 +700,51 @@ def encode_multi_tile_batch(
     byte_cum = np.concatenate([[0], np.cumsum(gvlens)])
     gb_len = byte_cum[geom_offsets[1:]] - byte_cum[geom_offsets[:-1]]
 
-    # ---- metadata: per-run dictionaries, vectorized ----
+    # ---- metadata: per-run key and value dictionaries, vectorized ----
+    # a feature carries a [key, value] pair for each non-NULL code; taken
+    # row by row, the pairs meet the keys and values in totalMeta's order
     C = len(meta_cols)
-    run_val_bytes: list[np.ndarray] = []   # per column: concatenated per-run dicts
-    run_val_lens = np.zeros(n_runs, dtype=np.int64)
-    cnt_prev = np.zeros(n_runs, dtype=np.int64)  # per-run value-dict base
-    if C:
-        tag_mat = np.empty((n, 2 * C), dtype=np.uint64)
-        # which [key, value] pairs exist: False where the code is NULL
-        tag_ok = np.empty((n, 2 * C), dtype=bool)
-        for k_idx, (key, codes, fbuf, foff) in enumerate(meta_cols):
-            K = np.int64(len(foff) - 1)
-            valid = codes >= 0
-            tag_ok[:, 2 * k_idx] = valid
-            tag_ok[:, 2 * k_idx + 1] = valid
-            rid_v, codes_v = rid[valid], codes[valid]
-            rkey = rid_v * (K + 1) + codes_v
-            u, first_idx, inv_u = np.unique(rkey, return_index=True, return_inverse=True)
-            # first position of each run inside u
-            run_first = np.searchsorted(u, rid[run_starts] * (K + 1))
-            # reorder each run's dictionary segment to FIRST-APPEARANCE
-            # order (tile-local canonical, independent of the batch-level
-            # code assignment); lexsort keeps segments contiguous per run,
-            # so run_first offsets stay valid for the permuted order
-            run_of_u = (u // (K + 1)).astype(np.int64)
-            perm = np.lexsort((first_idx, run_of_u))
-            rank = np.empty(len(u), dtype=np.int64)
-            rank[perm] = np.arange(len(u))
-            local = rank[inv_u] - run_first[rid_v]
-            tag_mat[:, 2 * k_idx] = k_idx
-            tag_mat[valid, 2 * k_idx + 1] = (cnt_prev[rid_v] + local).astype(np.uint64)
-            # per-run unique counts
-            run_cnt = np.concatenate([run_first[1:], [len(u)]]) - run_first
-            cnt_prev = cnt_prev + run_cnt
-            # gather framed value bytes of u's codes (per-run dict blocks)
-            ucodes = (u[perm] % (K + 1)).astype(np.int64)
-            vb = wire.ragged_gather(fbuf, foff[ucodes], foff[ucodes + 1] - foff[ucodes])
-            run_val_bytes.append((vb, ucodes, run_first))
-        ok = tag_ok.ravel()
-        tbuf, tvlens = wire.encode_varints_with_lens(tag_mat.ravel()[ok])
-        pair_lens = np.zeros(n * 2 * C, dtype=np.int64)
-        pair_lens[ok] = tvlens
-        tag_lens = pair_lens.reshape(n, 2 * C).sum(axis=1)
-    else:
-        tbuf = np.zeros(0, dtype=np.uint8)
-        tag_lens = np.zeros(n, dtype=np.int64)
+    codes = np.empty((n, C), dtype=np.int64)
+    for k_idx, (_, col, _, _) in enumerate(meta_cols):
+        codes[:, k_idx] = col
+    p_row, p_col = np.nonzero(codes >= 0)
+    p_run = rid[p_row]
+    vid, vbase, vbuf, voff = _shared_value_table(meta_cols)
+    p_val = vid[codes[p_row, p_col] + vbase[p_col]]
+    key_local, key_items, key_cnt = _first_appearance(p_run, p_col, C, n_runs)
+    val_local, val_items, val_cnt = _first_appearance(
+        p_run, p_val, len(voff) - 1, n_runs
+    )
+    tags = np.empty(2 * len(p_row), dtype=np.uint64)
+    tags[0::2] = key_local
+    tags[1::2] = val_local
+    tbuf, tvlens = wire.encode_varints_with_lens(tags)
+    tag_lens = np.bincount(
+        np.repeat(p_row, 2), weights=tvlens, minlength=n
+    ).astype(np.int64)
+    key_frames = [wire.len_delimited(3, key.encode("utf-8")) for key, _, _, _ in meta_cols]
+    keys_cat, run_keys_lens = _gather_runs(
+        np.frombuffer(b"".join(key_frames), np.uint8),
+        np.concatenate([[0], np.cumsum([len(f) for f in key_frames])]).astype(np.int64),
+        key_items, key_cnt,
+    )
+    vals_cat, run_val_lens = _gather_runs(vbuf, voff, val_items, val_cnt)
 
     # ---- feature framing (whole batch) ----
     ones = np.ones(n, dtype=np.int64)
     fid_buf, fid_lens = wire.encode_varints_with_lens(np.asarray(fids, np.int64).astype(np.uint64))
     glen_buf, glen_lens = wire.encode_varints_with_lens(gb_len.astype(np.uint64))
-    slots = [(np.full(n, 0x08, np.uint8), ones), (fid_buf, fid_lens)]
-    if C:
-        # a feature whose every metadata code is NULL has no tags field
-        # at all (not an empty one), like the reference encoder
-        has_tags = tag_lens > 0
-        tlen_buf, sub_lens = wire.encode_varints_with_lens(tag_lens[has_tags].astype(np.uint64))
-        tlen_lens = np.zeros(n, dtype=np.int64)
-        tlen_lens[has_tags] = sub_lens
-        slots += [
-            (np.full(int(has_tags.sum()), 0x12, np.uint8), has_tags.astype(np.int64)),
-            (tlen_buf, tlen_lens),
-            (tbuf, tag_lens),
-        ]
-    slots += [
+    # a feature whose every metadata code is NULL has no tags field at
+    # all (not an empty one), like the reference encoder
+    has_tags = tag_lens > 0
+    tlen_buf, sub_lens = wire.encode_varints_with_lens(tag_lens[has_tags].astype(np.uint64))
+    tlen_lens = np.zeros(n, dtype=np.int64)
+    tlen_lens[has_tags] = sub_lens
+    slots = [
+        (np.full(n, 0x08, np.uint8), ones), (fid_buf, fid_lens),
+        (np.full(int(has_tags.sum()), 0x12, np.uint8), has_tags.astype(np.int64)),
+        (tlen_buf, tlen_lens),
+        (tbuf, tag_lens),
         (np.full(n, 0x18, np.uint8), ones), (np.asarray(gts, np.int64).astype(np.uint8), ones),
         (np.full(n, 0x22, np.uint8), ones), (glen_buf, glen_lens), (gbuf, gb_len),
     ]
@@ -709,62 +755,22 @@ def encode_multi_tile_batch(
     )
 
     # ---- per-run layer messages, stitched across ALL runs ----
-    # constant-per-layer-name blocks: name field + keys block + tail
-    # keys/extent/version framing is name-invariant: build once, reuse
-    keys_block = np.frombuffer(
-        b"".join(
-            wire.len_delimited(3, key.encode("utf-8")) for key, _, _, _ in meta_cols
-        ),
-        np.uint8,
-    )
+    name_frames = [np.frombuffer(wire.len_delimited(1, nm.encode("utf-8")), np.uint8) for nm in lnames]
+    run_lcode = lcodes[run_starts]
+    head_lens = np.array([len(f) for f in name_frames], dtype=np.int64)[run_lcode]
+    head_cat = np.concatenate([name_frames[c] for c in run_lcode.tolist()])
     tail = np.frombuffer(
         wire.tag_bytes(5, wire.WT_VARINT) + wire.encode_varint(int(extent))
         + wire.tag_bytes(15, wire.WT_VARINT) + wire.encode_varint(int(version)),
         np.uint8,
     )
-    name_blocks = [
-        (
-            np.frombuffer(wire.len_delimited(1, nm.encode("utf-8")), np.uint8),
-            keys_block,
-            tail,
-        )
-        for nm in lnames
-    ]
-    run_lcode = lcodes[run_starts]
-    head_lens = np.array([len(b[0]) for b in name_blocks], dtype=np.int64)[run_lcode]
-    keys_lens = np.array([len(b[1]) for b in name_blocks], dtype=np.int64)[run_lcode]
-    tail_lens = np.array([len(b[2]) for b in name_blocks], dtype=np.int64)[run_lcode]
-    head_cat = (
-        np.concatenate([name_blocks[c][0] for c in run_lcode.tolist()])
-        if n_runs else np.zeros(0, np.uint8)
-    )
-    keys_cat = (
-        np.concatenate([name_blocks[c][1] for c in run_lcode.tolist()])
-        if n_runs else np.zeros(0, np.uint8)
-    )
-    tail_cat = (
-        np.concatenate([name_blocks[c][2] for c in run_lcode.tolist()])
-        if n_runs else np.zeros(0, np.uint8)
-    )
-    # per-run feature-bytes length
+    tail_lens = np.full(n_runs, len(tail), dtype=np.int64)
+    tail_cat = np.tile(tail, n_runs)
     run_feat_lens = np.add.reduceat(feat_lens, run_starts)
-    # per-run value-dict bytes: interleave each column's per-run blocks
-    if C:
-        val_slots = []
-        for vb, ucodes, run_first in run_val_bytes:
-            # per-run byte length of this column's dict block
-            _, _, fbuf_, foff_ = meta_cols[len(val_slots)]
-            entry_lens = foff_[ucodes + 1] - foff_[ucodes]
-            ecum = np.concatenate([[0], np.cumsum(entry_lens)])
-            col_run_lens = ecum[np.concatenate([run_first[1:], [len(ucodes)]])] - ecum[run_first]
-            val_slots.append((vb, col_run_lens))
-        vals_cat, run_val_lens = wire.ragged_stitch(val_slots)
-    else:
-        vals_cat = np.zeros(0, np.uint8)
 
     # field order matches encode_layer_from_streams — name, features,
     # keys, values, extent, version (…/Tile/Layer.hs:51-55)
-    layer_body_lens = head_lens + run_feat_lens + keys_lens + run_val_lens + tail_lens
+    layer_body_lens = head_lens + run_feat_lens + run_keys_lens + run_val_lens + tail_lens
     llen_buf, llen_lens = wire.encode_varints_with_lens(layer_body_lens.astype(np.uint64))
     run_ones = np.ones(n_runs, dtype=np.int64)
     layer_buf, layer_lens = wire.ragged_stitch(
@@ -773,7 +779,7 @@ def encode_multi_tile_batch(
             (llen_buf, llen_lens),
             (head_cat, head_lens),
             (feat_buf, run_feat_lens),
-            (keys_cat, keys_lens),
+            (keys_cat, run_keys_lens),
             (vals_cat, run_val_lens),
             (tail_cat, tail_lens),
         ]
@@ -791,8 +797,8 @@ def encode_multi_tile_batch(
 
 
 def encode_value_bytes(tag: int, v) -> bytes:
-    """Wire bytes of one Value message body (overzoom pre-encodes its
-    dictionary uniques with it)."""
+    """Wire bytes of one Value message body (overzoom re-encodes each
+    parent layer's values table with it)."""
     return _encode_value(tag, v)
 
 

@@ -18,8 +18,17 @@ Scale shape: children of a parent are computed FROM that parent alone,
 so the distributed operator is a single mapInArrow with ZERO shuffle —
 each task turns its parent rows into 4^levels-way child rows in place.
 Contrast: rebuilding z+k from source features pays a full feature
-shuffle into the encode; overzoom pays a decode + clip + encode per
+shuffle into the encode; overzoom pays a parse + clip + encode per
 parent, all executor-local.
+
+One lane: a task parses each parent once into its wire arrays, splits
+the features into child rows that keep their parent's (key, value)
+index codes, and encodes all child rows of its batch in one
+codec.encode_multi_tile_batch call per layer shape. The kernel builds the
+same per-layer dictionaries the reference encoder does, so the children
+are byte-identical to decode_tile -> split -> encode_tile, the scalar
+twin overzoom_blob_scalar. Parents whose wire shape the lane cannot
+prove byte-identical (see _raw_gate) go through that twin whole.
 
 Geometry semantics reuse the tiler's clip kernels (operators/clip.py):
 Liang-Barsky polyline clip, exact multi-piece polygon clip with hole
@@ -40,6 +49,7 @@ from ..mvt.geometry import (
     GEOM_LINESTRING,
     GEOM_POINT,
     GEOM_POLYGON,
+    geom_from_stream,
     geom_to_stream,
 )
 from .clip import _localize_line, _localize_ring, clip_polygon_exact, clip_polyline
@@ -53,6 +63,13 @@ def _child_range(lo: float, hi: float, extent: int, s: int, buffer_px: int):
     return max(0, min(s - 1, a)), max(0, min(s - 1, b))
 
 
+def _check_args(levels: int, buffer_px: int) -> None:
+    if levels < 1:
+        raise ValueError(f"overzoom levels must be >= 1, got {levels}")
+    if buffer_px < 0:
+        raise ValueError(f"overzoom buffer_px must be >= 0, got {buffer_px}")
+
+
 def overzoom_blob(
     data: bytes, levels: int = 1, buffer_px: int = 0
 ) -> list[tuple[int, int, bytes, int, int]]:
@@ -60,33 +77,28 @@ def overzoom_blob(
     every non-empty child in the 2^levels x 2^levels grid. Rejects the
     same malformed inputs decode_tile rejects.
 
-    Dispatches to the batched kernel (_overzoom_rows) — byte-identical to
-    the scalar twin below (differential-pinned in tests/test_overzoom.py),
-    ~10x faster on dense point tiles."""
-    out = []
-    z, xs, ys, ms, nfs, nls = _overzoom_rows(
+    Runs the batched kernel (_overzoom_rows), byte-identical to the
+    scalar twin below (differential-pinned in tests/test_overzoom.py)."""
+    _, xs, ys, ms, nfs, nls = _overzoom_rows(
         [(0, 0, 0, data)], levels=levels, buffer_px=buffer_px
     )
-    for x2, y2, blob, nf, nl in zip(xs, ys, ms, nfs, nls):
-        out.append((x2, y2, blob, nf, nl))
-    return out
+    return list(zip(xs, ys, ms, nfs, nls))
 
 
 def overzoom_blob_scalar(
     data: bytes, levels: int = 1, buffer_px: int = 0
 ) -> list[tuple[int, int, bytes, int, int]]:
     """Reference twin of overzoom_blob: plain per-feature object path
-    through decode_tile -> _split_feature -> encode_tile. Kept for the
-    differential suite; the distributed operator uses the batched
-    kernel."""
-    if levels < 1:
-        raise ValueError(f"overzoom levels must be >= 1, got {levels}")
+    through decode_tile -> _split_feature -> encode_tile. The differential
+    suite compares the batched kernel against it, and the kernel sends it
+    every parent its gate rejects."""
+    _check_args(levels, buffer_px)
     s = 1 << levels
     kids: dict[tuple[int, int], dict[str, codec.Layer]] = {}
     for name, layer in codec.decode_tile(data).items():
         ext = layer.extent
         for f in layer.features:
-            for (cx, cy), geom in _split_feature(f, ext, s, buffer_px):
+            for (cx, cy), geom in _split_feature(f.geom_type, f.geom, ext, s, buffer_px):
                 lay = kids.setdefault((cx, cy), {}).setdefault(
                     name, codec.Layer(name, layer.version, ext, [])
                 )
@@ -101,14 +113,14 @@ def overzoom_blob_scalar(
     return out
 
 
-def _split_feature(f, ext: int, s: int, b: int):
+def _split_feature(gt: int, geom, ext: int, s: int, b: int):
     """Yield ((cx, cy), child-local geometry) for every child the scaled
-    feature intersects. Child boxes are [c*ext - b, (c+1)*ext + b]; with
+    feature (geometry type gt, decoded geometry geom) intersects. Child boxes are [c*ext - b, (c+1)*ext + b]; with
     b == 0 the high edge is OPEN except on the parent's own east/south
     edge (child s-1) — the tiler's exact-tiling ownership rule, so a
     point on an interior child boundary emits exactly once."""
-    if f.geom_type == GEOM_POINT:
-        pts = np.asarray(f.geom, np.int64) * s
+    if gt == GEOM_POINT:
+        pts = np.asarray(geom, np.int64) * s
         if not len(pts):
             return
         xlo, xhi = _child_range(pts[:, 0].min(), pts[:, 0].max(), ext, s, b)
@@ -128,8 +140,8 @@ def _split_feature(f, ext: int, s: int, b: int):
                     yield (cx, cy), pts[m] - (cx * ext, cy * ext)
         return
 
-    if f.geom_type == GEOM_LINESTRING:
-        parts = [np.asarray(p, np.float64) * s for p in f.geom if len(p) >= 2]
+    if gt == GEOM_LINESTRING:
+        parts = [np.asarray(p, np.float64) * s for p in geom if len(p) >= 2]
         if not parts:
             return
         # per-part bboxes; a part STRICTLY outside a child box would come
@@ -168,7 +180,7 @@ def _split_feature(f, ext: int, s: int, b: int):
                     yield (cx, cy), out
         return
 
-    if f.geom_type == GEOM_POLYGON:
+    if gt == GEOM_POLYGON:
         # decode stores rings CLOSED; the exact clipper tolerates that,
         # but strip the duplicate once here instead of per child box
         polys = [
@@ -179,7 +191,7 @@ def _split_feature(f, ext: int, s: int, b: int):
                 for r in poly
                 if len(r)
             ]
-            for poly in f.geom
+            for poly in geom
             if len(poly) and len(poly[0])
         ]
         polys = [p for p in polys if len(p[0]) >= 3]
@@ -225,118 +237,125 @@ def _split_feature(f, ext: int, s: int, b: int):
     raise ValueError("Geometry type of UNKNOWN given.")
 
 
-def _raw_gate(raw):
-    """Decide whether one parsed layer can skip decode_tile entirely:
-    regular batch decode, every feature a single-point ``[MoveTo(1), zx,
-    zy]`` stream, metadata either absent everywhere or exactly one
-    uniform in-range key with a uniform value tag — i.e. the shape every
-    point-sink layer has. Returns the prepared arrays or None. The gate
-    PROVES well-formedness of everything it bypasses (tag pairing, index
-    ranges, geometry validity), so a gated tile needs no decode_tile
-    validation pass; anything else falls back to the decode path, which
-    rejects exactly what decode_tile rejects."""
-    bt = raw.batch
-    if bt is None:
-        return None
-    n = len(bt.ids)
-    if n == 0:
-        return None
-    if not bool((np.asarray(bt.types) == 1).all()):
-        return None
-    gc = np.asarray(bt.geom_cnt)
-    gv = np.asarray(bt.geom_vals)
-    if not bool((gc == 3).all()) or len(gv) != 3 * n or not bool((gv[0::3] == 9).all()):
-        return None
-    tc = np.asarray(bt.tag_cnt)
-    if bool((tc == 0).all()):
-        return gv, None, None, ((), ())
-    if not bool((tc == 2).all()):
-        return None
-    tv = np.asarray(bt.tag_vals)
-    if len(tv) != 2 * n:
-        return None
-    kk, vv = tv[0::2], tv[1::2]
-    if not bool((kk == kk[0]).all()) or int(kk[0]) >= len(raw.keys):
-        return None
-    if not len(raw.values) or int(vv.max()) >= len(raw.values):
-        return None
-    used = np.unique(vv)
-    tags = {raw.values[int(i)][0] for i in used}
-    if len(tags) != 1:
-        return None
-    tag0 = next(iter(tags))
-    return gv, vv.astype(np.int64), used, ((raw.keys[int(kk[0])],), (tag0,))
+def _raw_gate(raws):
+    """Columns (ids, types, tag_vals, tag_cnt, geom_vals, geom_cnt) of
+    every layer of a parsed parent when the parent can take the
+    vectorized lane, else None.
 
-
-def _raw_parent_chunks(data: bytes, z2: int, ptx: int, pty: int, s: int):
-    """Wire-level lane for a WHOLE parent: if every layer passes
-    _raw_gate, derive all children straight from the parsed command
-    streams (unzigzag -> scale -> floor-div child -> re-zigzag, all
-    vectorized) and return [(group_key, chunk)] for the batch encoder —
-    no decode_tile, no Feature objects. Returns None when any layer
-    fails the gate (duplicate names, lines/polys, multi-key metadata,
-    irregular wire), sending the parent through the decode path
-    unchanged. Framing errors raise here exactly as decode_tile would —
-    parse_raw_tile is the same parser."""
-    raws = codec.parse_raw_tile(data)
-    names = [r.name for r in raws]
-    if len(set(names)) != len(names):
+    The lane must write what decode_tile -> encode_tile writes, so the
+    gate PROVES what it relies on: unique layer names (decode_tile keeps
+    the last of a name) and unique keys (a decoded metadata dict would
+    merge them); every layer non-empty with known geometry types
+    (decode_tile raises otherwise); even tag counts; key indices strictly
+    increasing within each feature, so a feature's pairs come in key
+    column order, the order its decoded dict lists them; every index in
+    range. Columns come from the wire parser's batch arrays, or from the
+    features it parsed one by one (small tiles, irregular wire)."""
+    if len({r.name for r in raws}) != len(raws):
         return None
-    preps = []
-    for raw in raws:
-        p = _raw_gate(raw)
-        if p is None:
-            return None
-        preps.append(p)
     out = []
-    for raw, (gv, vcodes, used, (keys0, tags0)) in zip(raws, preps):
-        ext = raw.extent if raw.extent is not None else codec.DEFAULT_EXTENT
-        zx = gv[1::3].astype(np.int64)
-        zy = gv[2::3].astype(np.int64)
-        px = (zx >> 1) ^ -(zx & 1)
-        py = (zy >> 1) ^ -(zy & 1)
-        xs, ys = px * s, py * s
-        lim = s * ext
-        ok = (xs >= 0) & (xs <= lim) & (ys >= 0) & (ys <= lim)
-        keep = np.flatnonzero(ok)
-        if not len(keep):
-            continue
-        xs, ys = xs[keep], ys[keep]
-        cx = np.minimum(xs // ext, s - 1)
-        cy = np.minimum(ys // ext, s - 1)
-        # child-major, parent emission order within a child — the same
-        # (cx, cy, original index) order the decode lanes produce
-        order = np.lexsort((keep, cy, cx))
-        cx, cy = cx[order], cy[order]
-        lx = xs[order] - cx * ext
-        ly = ys[order] - cy * ext
-        m = len(order)
-        svals = np.empty((m, 3), np.uint32)
-        svals[:, 0] = 9
-        svals[:, 1] = ((lx << 1) ^ (lx >> 63)).astype(np.uint32)
-        svals[:, 2] = ((ly << 1) ^ (ly >> 63)).astype(np.uint32)
-        chunk = {
-            "tz": np.full(m, z2, np.int64),
-            "tx": ptx * s + cx,
-            "ty": pty * s + cy,
-            "fid": np.asarray(bt_ids := raw.batch.ids, np.uint64).astype(np.int64)[keep][order],
-            "gt": np.ones(m, np.int64),
-            "svals": svals.ravel(),
-            "slens": np.full(m, 3, np.int64),
-            "codes": [],
-            "framed": [],
-        }
-        if keys0:
-            local = np.searchsorted(used, vcodes[keep][order])
-            chunk["codes"] = [local]
-            chunk["framed"] = [[
-                wire.len_delimited(
-                    4, codec.encode_value_bytes(tags0[0], raw.values[int(i)][1])
-                )
-                for i in used.tolist()
-            ]]
-        out.append(((raw.name, ext, raw.version, keys0, tags0), chunk))
+    for raw in raws:
+        if not raw.features or len(set(raw.keys)) != len(raw.keys):
+            return None
+        if raw.batch is not None:
+            bt = raw.batch
+            cols = (bt.ids, bt.types, bt.tag_vals, bt.tag_cnt, bt.geom_vals, bt.geom_cnt)
+        else:
+            fs = raw.features
+            n = len(fs)
+            cols = (
+                np.fromiter((f.id for f in fs), np.uint64, n),
+                np.fromiter((f.type for f in fs), np.uint64, n),
+                np.concatenate([np.zeros(0, np.uint32)] + [f.tags for f in fs]),
+                np.fromiter((f.tags.size for f in fs), np.int64, n),
+                np.concatenate([np.zeros(0, np.uint32)] + [f.geometry for f in fs]),
+                np.fromiter((f.geometry.size for f in fs), np.int64, n),
+            )
+        types, tv, tc = cols[1], cols[2], cols[3]
+        if not bool(((types >= GEOM_POINT) & (types <= GEOM_POLYGON)).all()):
+            return None
+        if bool((tc & 1).any()):
+            return None
+        kk = tv[0::2].astype(np.int64)
+        if len(kk):
+            if int(kk.max()) >= len(raw.keys) or int(tv[1::2].max()) >= len(raw.values):
+                return None
+            feat = np.repeat(np.arange(len(tc)), tc // 2)
+            if bool(((feat[1:] == feat[:-1]) & (kk[1:] <= kk[:-1])).any()):
+                return None
+        out.append(cols)
     return out
+
+
+def _layer_rows(cols, ext: int, s: int, b: int):
+    """Child rows of one gated parent layer, in the scalar twin's order:
+    child (cx, cy), then geometry type, then parent order. Returns
+    (cx, cy, parent feature index, geometry type, stream values, stream
+    lengths).
+
+    At buffer_px 0 single points are split vectorized straight from the
+    command streams (unzigzag -> scale -> floor-div child -> re-zigzag);
+    every other feature gets its geometry as layer_from_raw does and goes
+    through _split_feature."""
+    _, types, _, _, gv, gc = cols
+    n = len(types)
+    types = types.astype(np.int64)
+    goff = np.zeros(n + 1, np.int64)
+    np.cumsum(gc, out=goff[1:])
+    single = np.zeros(n, bool)
+    if b == 0 and len(gv):
+        head = gv[np.minimum(goff[:-1], len(gv) - 1)]
+        single = (types == GEOM_POINT) & (gc == 3) & (head == 9)
+
+    si = np.flatnonzero(single)
+    zx = gv[goff[si] + 1].astype(np.int64)
+    zy = gv[goff[si] + 2].astype(np.int64)
+    xs = ((zx >> 1) ^ -(zx & 1)) * s
+    ys = ((zy >> 1) ^ -(zy & 1)) * s
+    lim = s * ext
+    ok = (xs >= 0) & (xs <= lim) & (ys >= 0) & (ys <= lim)
+    si, xs, ys = si[ok], xs[ok], ys[ok]
+    cx = [np.minimum(xs // ext, s - 1)]
+    cy = [np.minimum(ys // ext, s - 1)]
+    lx, ly = xs - cx[0] * ext, ys - cy[0] * ext
+    svals = np.empty((len(si), 3), np.uint32)
+    svals[:, 0] = 9  # MoveTo(1)
+    svals[:, 1] = ((lx << 1) ^ (lx >> 63)).astype(np.uint32)
+    svals[:, 2] = ((ly << 1) ^ (ly >> 63)).astype(np.uint32)
+    src, streams = [si], [svals.ravel()]
+    lens = [np.full(len(si), 3, np.int64)]
+
+    oth = np.flatnonzero(~single)
+    if len(oth):
+        from ..mvt import fastdecode
+
+        geoms = fastdecode.assemble_geoms(
+            types[oth], wire.ragged_gather(gv, goff[oth], gc[oth]), gc[oth],
+            defer_fallback=True,
+        )
+        kids = []
+        for i, geom in zip(oth.tolist(), geoms):
+            gt = int(types[i])
+            if geom is None:  # deviating lane: the scalar twin raises or decodes
+                geom = geom_from_stream(gt, gv[goff[i]:goff[i + 1]])
+            for c, g in _split_feature(gt, geom, ext, s, b):
+                kids.append((c, i, geom_to_stream(gt, g).astype(np.uint32)))
+        if kids:
+            cx.append(np.fromiter((k[0][0] for k in kids), np.int64, len(kids)))
+            cy.append(np.fromiter((k[0][1] for k in kids), np.int64, len(kids)))
+            src.append(np.fromiter((k[1] for k in kids), np.int64, len(kids)))
+            streams.extend(k[2] for k in kids)
+            lens.append(np.fromiter((len(k[2]) for k in kids), np.int64, len(kids)))
+
+    cx, cy, src, lens = (np.concatenate(a) for a in (cx, cy, src, lens))
+    gt = types[src]
+    order = np.lexsort((src, gt, cy, cx))
+    starts = np.cumsum(lens) - lens
+    return (
+        cx[order], cy[order], src[order], gt[order],
+        wire.ragged_gather(np.concatenate(streams), starts[order], lens[order]),
+        lens[order],
+    )
 
 
 def _overzoom_rows(parents, levels: int = 1, buffer_px: int = 0):
@@ -346,226 +365,86 @@ def _overzoom_rows(parents, levels: int = 1, buffer_px: int = 0):
     parallel lists (tile_z, tile_x, tile_y, mvt, n_features, n_layers),
     children sorted by key.
 
-    Byte-identical to the scalar object path (encode_layer field order,
-    first-appearance dictionaries, stable pts->lines->polys sort,
-    parent-order feature emission) — pinned by the differential suite.
-    Two lanes per parent-layer:
-
-    * batched lane (homogeneous metadata — every feature carries the same
-      key/tag tuple, the shape every sink-produced layer has): child
-      assignment for single-point features is one vectorized block
-      (floor-div child, subtract, zigzag), everything else splits through
-      the clip kernels; ALL resulting child rows across ALL parents of
-      the batch then encode in ONE encode_multi_tile_batch call per
-      distinct (layer, extent, version, keys) group — the same ~30-array-
-      pass path the tile sink uses, no per-feature Python encode.
-    * object lane (heterogeneous metadata): per-child encode_layer, the
-      decode-side general case.
+    One lane, byte-identical to the scalar twin (pinned by the
+    differential suite): each parent is parsed once; every child row
+    carries its parent feature's (key index, value index) codes, the
+    parent layer's framed values table serves as the dictionary of every
+    key column, and ALL child rows of the batch encode in ONE
+    encode_multi_tile_batch call per (layer, extent, version, keys)
+    group; the kernel builds the same totalMeta dictionaries encode_layer
+    does. A parent _raw_gate rejects goes whole through
+    overzoom_blob_scalar, and its children join the same per-child frame
+    merge.
     """
-    if levels < 1:
-        raise ValueError(f"overzoom levels must be >= 1, got {levels}")
+    _check_args(levels, buffer_px)
     s = 1 << levels
-    b = buffer_px
     frames: dict[tuple, list] = {}  # child key -> [(name, frame, nrows)]
-    groups: dict[tuple, dict] = {}
-    raw_chunks: dict[tuple, list] = {}  # gkey -> [chunk dicts], append order
+    groups: dict[tuple, list] = {}  # (name, ext, version, keys) -> chunks
 
     for pz, ptx, pty, data in parents:
+        data = bytes(data)
         z2 = pz + levels
-        if b == 0:
-            got = _raw_parent_chunks(bytes(data), z2, ptx, pty, s)
-            if got is not None:
-                for gkey, chunk in got:
-                    raw_chunks.setdefault(gkey, []).append(chunk)
-                continue
-        for name, layer in codec.decode_tile(bytes(data)).items():
-            ext = layer.extent
-            feats = layer.features
-            if not feats:
-                continue
-            keys0 = tuple(feats[0].metadata.keys())
-            tags0 = tuple(t for t, _ in feats[0].metadata.values())
-            # batched-lane gate: at most ONE metadata key, uniform across
-            # features. With C <= 1 the batch encoder's per-column value
-            # dictionary coincides with encode_layer's interleaved
-            # first-appearance dictionary, so both lanes emit identical
-            # bytes; C >= 2 layers keep the object path (dictionary entry
-            # ORDER would differ — decode-equal but not byte-equal).
-            gate = len(keys0) <= 1 and all(
-                tuple(f.metadata.keys()) == keys0
-                and tuple(t for t, _ in f.metadata.values()) == tags0
-                for f in feats
-            )
-            if not gate:
-                kids: dict[tuple, codec.Layer] = {}
-                for f in feats:
-                    for c, geom in _split_feature(f, ext, s, b):
-                        lay = kids.setdefault(
-                            c, codec.Layer(name, layer.version, ext, [])
-                        )
-                        lay.features.append(
-                            codec.Feature(f.feature_id, f.metadata, f.geom_type, geom)
-                        )
-                for c in sorted(kids):
-                    ck = (z2, ptx * s + c[0], pty * s + c[1])
-                    frame = wire.len_delimited(3, codec.encode_layer(kids[c]))
-                    frames.setdefault(ck, []).append(
-                        (name, frame, len(kids[c].features))
-                    )
-                continue
-
-            # ---- batched lane ----
-            single_res: dict[int, tuple] = {}
-            if b == 0:
-                singles = [
-                    i for i, f in enumerate(feats)
-                    if f.geom_type == GEOM_POINT and len(f.geom) == 1
-                ]
-                if singles:
-                    coords = (
-                        np.concatenate([feats[i].geom for i in singles]).astype(np.int64)
-                        * s
-                    )
-                    lim = s * ext
-                    ok = (
-                        (coords[:, 0] >= 0) & (coords[:, 0] <= lim)
-                        & (coords[:, 1] >= 0) & (coords[:, 1] <= lim)
-                    )
-                    cx = np.minimum(coords[:, 0] // ext, s - 1)
-                    cy = np.minimum(coords[:, 1] // ext, s - 1)
-                    lx = coords[:, 0] - cx * ext
-                    ly = coords[:, 1] - cy * ext
-                    zz = np.empty((len(singles), 3), np.uint32)
-                    zz[:, 0] = 9  # MoveTo(1)
-                    zz[:, 1] = ((lx << 1) ^ (lx >> 63)).astype(np.uint32)
-                    zz[:, 2] = ((ly << 1) ^ (ly >> 63)).astype(np.uint32)
-                    cxl, cyl, okl = cx.tolist(), cy.tolist(), ok.tolist()
-                    for j, i in enumerate(singles):
-                        single_res[i] = (okl[j], cxl[j], cyl[j], zz[j])
-
-            kid_rows: dict[tuple, list] = {}
-            for i, f in enumerate(feats):
-                r = single_res.get(i)
-                if r is not None:
-                    okj, cxj, cyj, stream = r
-                    if okj:
-                        kid_rows.setdefault((cxj, cyj), []).append(
-                            (f.geom_type, f.feature_id, f.metadata, stream)
-                        )
-                    continue
-                for c, geom in _split_feature(f, ext, s, b):
-                    stream = geom_to_stream(f.geom_type, geom).astype(np.uint32)
-                    kid_rows.setdefault(c, []).append(
-                        (f.geom_type, f.feature_id, f.metadata, stream)
-                    )
-            if not kid_rows:
-                continue
-            g = groups.setdefault(
-                (name, ext, layer.version, keys0, tags0),
-                {
-                    "tz": [], "tx": [], "ty": [], "fid": [], "gt": [],
-                    "streams": [], "vals": [[] for _ in keys0],
-                },
-            )
-            for c in sorted(kid_rows):
-                rows = kid_rows[c]
-                rows.sort(key=lambda r: r[0])  # stable: pts, lines, polys
-                x2, y2 = ptx * s + c[0], pty * s + c[1]
-                for gt, fid, meta, stream in rows:
-                    g["tz"].append(z2)
-                    g["tx"].append(x2)
-                    g["ty"].append(y2)
-                    w = fid & 0xFFFFFFFFFFFFFFFF  # wire uint64 -> signed i64
-                    g["fid"].append(w - (1 << 64) if w >= (1 << 63) else w)
-                    g["gt"].append(gt)
-                    g["streams"].append(np.asarray(stream, np.uint32))
-                    for k_i, key in enumerate(keys0):
-                        g["vals"][k_i].append(meta[key][1])
-
-    for gkey in list(groups) + [k for k in raw_chunks if k not in groups]:
-        name, ext, version, keys0, tags0 = gkey
-        parts = []
-        g = groups.get(gkey)
-        if g:
-            # the decode-lane rows of this group, folded into one chunk
-            m = len(g["fid"])
-            codes_l, framed_l = [], []
-            for k_i in range(len(keys0)):
-                vals = g["vals"][k_i]
-                lut: dict = {}
-                uniq: list = []
-                codes = np.empty(m, np.int64)
-                for i, v in enumerate(vals):
-                    c = lut.get(v)
-                    if c is None:
-                        c = lut[v] = len(uniq)
-                        uniq.append(v)
-                    codes[i] = c
-                codes_l.append(codes)
-                # fully FRAMED Layer.values entries (0x22 + len + body),
-                # the shape encode_multi_tile_batch's dictionaries expect
-                framed_l.append([
-                    wire.len_delimited(4, codec.encode_value_bytes(tags0[k_i], v))
-                    for v in uniq
-                ])
-            parts.append({
-                "tz": np.asarray(g["tz"], np.int64),
-                "tx": np.asarray(g["tx"], np.int64),
-                "ty": np.asarray(g["ty"], np.int64),
-                "fid": np.asarray(g["fid"], np.int64),
-                "gt": np.asarray(g["gt"], np.int64),
-                "svals": (
-                    np.concatenate(g["streams"]) if m else np.zeros(0, np.uint32)
-                ),
-                "slens": np.fromiter(
-                    (len(st) for st in g["streams"]), np.int64, count=m
-                ),
-                "codes": codes_l,
-                "framed": framed_l,
-            })
-        parts.extend(raw_chunks.get(gkey, ()))
-        n = int(sum(len(p["fid"]) for p in parts))
-        if not n:
+        raws = codec.parse_raw_tile(data)
+        gated = _raw_gate(raws)
+        if gated is None:
+            for cx, cy, blob, _, _ in overzoom_blob_scalar(data, levels, buffer_px):
+                frames.setdefault((z2, ptx * s + cx, pty * s + cy), []).extend(
+                    codec.split_layer_frames(blob)
+                )
             continue
-        tz = np.concatenate([p["tz"] for p in parts])
-        tx = np.concatenate([p["tx"] for p in parts])
-        ty = np.concatenate([p["ty"] for p in parts])
-        fid = np.concatenate([p["fid"] for p in parts])
-        gt = np.concatenate([p["gt"] for p in parts])
-        geom_values = np.concatenate([p["svals"] for p in parts])
-        lens = np.concatenate([p["slens"] for p in parts])
+        for raw, cols in zip(raws, gated):
+            ext = raw.extent if raw.extent is not None else codec.DEFAULT_EXTENT
+            cx, cy, src, gt, svals, slens = _layer_rows(cols, ext, s, buffer_px)
+            if not len(src):
+                continue
+            ids, _, tv, tc, _, _ = cols
+            n = len(ids)
+            vcode = np.full((n, len(raw.keys)), -1, np.int64)
+            vcode[np.repeat(np.arange(n), tc // 2), tv[0::2]] = tv[1::2]
+            groups.setdefault((raw.name, ext, raw.version, tuple(raw.keys)), []).append({
+                "tz": np.full(len(src), z2, np.int64),
+                "tx": ptx * s + cx,
+                "ty": pty * s + cy,
+                "fid": np.asarray(ids, np.uint64).astype(np.int64)[src],
+                "gt": gt,
+                "svals": svals,
+                "slens": slens,
+                "codes": vcode[src],
+                # fully FRAMED Layer.values entries (0x22 + len + body)
+                "framed": [
+                    wire.len_delimited(4, codec.encode_value_bytes(tag, v))
+                    for tag, v in raw.values
+                ],
+            })
+
+    for (name, ext, version, keys), parts in groups.items():
+        cat = {k: np.concatenate([p[k] for p in parts]) for k in (
+            "tz", "tx", "ty", "fid", "gt", "svals", "slens",
+        )}
+        n = len(cat["fid"])
         geom_offsets = np.zeros(n + 1, np.int64)
-        np.cumsum(lens, out=geom_offsets[1:])
-        meta_cols = []
-        for k_i, key in enumerate(keys0):
-            # chunk-local codes offset into one concatenated framed-value
-            # table; encode_multi_tile_batch re-canonicalizes per run, so
-            # cross-chunk dedupe is unnecessary
-            base = 0
-            code_parts, framed_all = [], []
-            for p in parts:
-                code_parts.append(p["codes"][k_i] + base)
-                framed_all.extend(p["framed"][k_i])
-                base += len(p["framed"][k_i])
-            codes = np.concatenate(code_parts)
-            foff = np.zeros(len(framed_all) + 1, np.int64)
-            np.cumsum(
-                np.fromiter(map(len, framed_all), np.int64, count=len(framed_all)),
-                out=foff[1:],
-            )
-            fbuf = np.frombuffer(b"".join(framed_all), np.uint8)
-            meta_cols.append((key, codes, fbuf, foff))
+        np.cumsum(cat["slens"], out=geom_offsets[1:])
+        # chunk-local value indices offset into one concatenated table
+        base = np.cumsum([0] + [len(p["framed"]) for p in parts[:-1]])
+        codes = np.concatenate([
+            np.where(p["codes"] >= 0, p["codes"] + b0, -1) for p, b0 in zip(parts, base)
+        ])
+        framed = [f for p in parts for f in p["framed"]]
+        fbuf = np.frombuffer(b"".join(framed), np.uint8)
+        foff = np.zeros(len(framed) + 1, np.int64)
+        np.cumsum(np.fromiter(map(len, framed), np.int64, len(framed)), out=foff[1:])
         mvts, tile_starts, _ = codec.encode_multi_tile_batch(
-            tz, tx, ty,
+            cat["tz"], cat["tx"], cat["ty"],
             np.zeros(n, np.int64), [name],
-            fid, gt,
-            geom_values, geom_offsets, meta_cols,
+            cat["fid"], cat["gt"],
+            cat["svals"], geom_offsets,
+            [(key, codes[:, j], fbuf, foff) for j, key in enumerate(keys)],
             version=version, extent=ext,
         )
         bounds = np.concatenate([tile_starts, [n]]).astype(np.int64)
         for t_i, frame in enumerate(mvts):
             r0 = int(bounds[t_i])
-            ck = (int(tz[r0]), int(tx[r0]), int(ty[r0]))
+            ck = (int(cat["tz"][r0]), int(cat["tx"][r0]), int(cat["ty"][r0]))
             frames.setdefault(ck, []).append(
                 (name, frame, int(bounds[t_i + 1] - r0))
             )
@@ -589,9 +468,7 @@ def overzoom_tiles(
     2^levels-deeper child tile rows out. ZERO shuffle — see module
     docstring; feed the output straight into a tile sink or another
     overzoom_tiles hop."""
-    if levels < 1:
-        raise ValueError(f"overzoom levels must be >= 1, got {levels}")
-    s = 1 << levels
+    _check_args(levels, buffer_px)
 
     def run(batches):
         import pyarrow as pa

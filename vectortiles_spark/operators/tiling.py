@@ -369,7 +369,9 @@ def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | N
 
     Metadata columns (any column beyond the core feature schema) are
     dictionary-encoded once per batch and their uniques pre-framed to wire
-    bytes; a NULL value leaves that key off the feature. Rows with an
+    bytes; a NULL value leaves that key off the feature. The kernel turns
+    them into each layer's totalMeta dictionaries, so a tile's bytes are
+    the ones codec.encode_layer_from_streams writes for its features. Rows with an
     empty command stream are dropped (an empty feature would make the tile
     undecodable, Internal.hs:296). A tile left with no rows still yields
     its row (mvt=b"", n_features=0, n_layers=0): refresh_tiles' rebuild

@@ -145,9 +145,11 @@ def test_tfidf_shuffle_budget(spark):
 
 def test_ingest_paths_shuffle_free(spark, tmp_path):
     """Every tile INGEST source composes scan -> mapInArrow decode with
-    ZERO shuffles: tileset directory, MBTiles rowid ranges, and the
-    decode itself — at 10^12 tiles the ingest cost must be one pass."""
+    ZERO shuffles: tileset directory, MBTiles rowid ranges, PMTiles byte
+    ranges, and the decode itself — at 10^12 tiles the ingest cost must
+    be one pass."""
     from vectortiles_spark.sources.mbtiles import read_mbtiles, write_mbtiles
+    from vectortiles_spark.sources.pmtiles import read_pmtiles, write_pmtiles
     from vectortiles_spark.sources.tileset import read_tileset, write_tileset
 
     cust = spark.read.parquet(f"{SF}/customer.parquet")
@@ -160,9 +162,12 @@ def test_ingest_paths_shuffle_free(spark, tmp_path):
 
     mb = str(tmp_path / "t.mbtiles")
     write_mbtiles(tiles, mb)
-    # one repartition distributes the (tiny) range table; the big tile
-    # scan + decode itself adds none
-    assert audit.count_shuffles(tiling.decode_tiles(read_mbtiles(spark, mb))) <= 1
+    # each rowid range is one partition of spark.range: no exchange
+    assert audit.count_shuffles(tiling.decode_tiles(read_mbtiles(spark, mb))) == 0
+
+    pm = str(tmp_path / "t.pmtiles")
+    write_pmtiles(tiles, pm)
+    assert audit.count_shuffles(tiling.decode_tiles(read_pmtiles(spark, pm))) == 0
 
 
 def test_minhash_signatures_single_exchange(spark):

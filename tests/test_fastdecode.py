@@ -446,3 +446,15 @@ def test_decode_tiles_duplicate_layer_names(spark):
                                "tile_z int, tile_x int, tile_y int, mvt binary")
     out = tiling.decode_tiles(df).collect()
     assert sorted(r.feature_id for r in out) == [20, 21, 22]
+
+
+def test_decode_tiles_null_mvt_names_the_tile(spark):
+    """A NULL blob is a ValueError naming the column and the tile, not a
+    bare TypeError from the buffer protocol."""
+    from vectortiles_spark.operators import tiling
+
+    df = spark.createDataFrame(
+        [(3, 5, 6, None)], "tile_z int, tile_x int, tile_y int, mvt binary"
+    )
+    with pytest.raises(Exception, match=r"ValueError: decode_tiles: column 'mvt' is NULL for tile z/x/y 3/5/6"):
+        tiling.decode_tiles(df).collect()

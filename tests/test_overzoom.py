@@ -395,3 +395,13 @@ def test_two_key_sink_parents_stay_on_vectorized_lane(monkeypatch):
     assert [overzoom_blob(p) for p in parents] == want
     with pytest.raises(AssertionError, match="fallback"):
         overzoom_blob(_null_first_key())
+
+
+def test_overzoom_tiles_null_mvt_names_the_tile(spark):
+    """A NULL parent blob is a ValueError naming the column and the tile,
+    not a bare TypeError."""
+    df = spark.createDataFrame(
+        [(3, 5, 6, None)], "tile_z int, tile_x int, tile_y int, mvt binary"
+    )
+    with pytest.raises(Exception, match=r"ValueError: overzoom_tiles: column 'mvt' is NULL for tile z/x/y 3/5/6"):
+        overzoom_tiles(df).collect()

@@ -213,8 +213,10 @@ def _parse_feature(buf: memoryview) -> RawFeature:
     return f
 
 
-# below this many features the scalar per-feature parser wins (the batch
-# kernels have a fixed NumPy setup cost per layer)
+# below this many features in ONE tile the scalar per-feature parser and
+# geometry decoder win (the batch kernels have a fixed NumPy setup cost
+# per call): on a 4-core host, decode_tile over 300 tiles of 1-14 features
+# took 224 ms with the batch kernels for every tile, 156 ms with this switch
 _BATCH_MIN_FEATURES = 8
 
 
@@ -289,20 +291,16 @@ def _peek_layer_name(buf) -> str | None:
     return None
 
 
-def parse_raw_tile(data: bytes, layers=None) -> list[RawLayer]:
-    """Parse MVT bytes to raw protobuf-level layers (Tile.layers, field 3).
+def _walk_tile(buf, pos: int, end: int, want) -> list[tuple[RawLayer, list[tuple[int, int]]]]:
+    """Field-walk the tile message buf[pos:end]: every selected layer
+    (features NOT parsed) with its feature spans as (start, len) offsets
+    into ``buf``. ``want`` is a set of layer names or None for all.
 
-    ``layers`` (an iterable of names) enables LAYER-SELECTIVE partial
-    decode — the reference's lazy-decode property (one layer of roads.mvt
-    in 6.4ms vs 9.8ms full, bench/Bench.hs:63-67) on the ingest path: a
-    non-matching layer message costs one name peek plus a length skip,
-    never feature/key/value parsing. Our encoder writes the name first,
-    so the peek usually touches only the message's leading bytes."""
-    buf = memoryview(data)
-    pos = 0
-    end = len(buf)
-    want = None if layers is None else set(layers)
-    walked: list[tuple[RawLayer, list[tuple[int, int]]]] = []
+    Reads are bounded at ``end`` (a zero-copy truncated view keeps the
+    offsets global), so a tile walked inside a buffer that holds a whole
+    column of tiles raises on torn framing exactly as it does alone."""
+    buf = buf[:end]
+    walked = []
     while pos < end:
         fnum, wt, pos = wire.read_tag(buf, pos)
         if fnum == 3 and wt == wire.WT_LEN:
@@ -320,25 +318,57 @@ def parse_raw_tile(data: bytes, layers=None) -> list[RawLayer]:
             pos += n
         else:
             pos = wire.skip_field(buf, pos, wt)
+    return walked
 
-    total = sum(len(sp) for _, sp in walked)
-    if total < _BATCH_MIN_FEATURES:
+
+def _parse_spans(buf, spans: list[tuple[int, int]]):
+    """ONE fastdecode.parse_features_batch call over feature spans of
+    ``buf``. Returns the batch arrays and each feature's tag and geometry
+    offsets (n + 1 entries each)."""
+    from . import fastdecode
+
+    n = len(spans)
+    fstart = np.fromiter((s for s, _ in spans), dtype=np.int64, count=n)
+    flen = np.fromiter((ln for _, ln in spans), dtype=np.int64, count=n)
+    bf = fastdecode.parse_features_batch(np.frombuffer(buf, dtype=np.uint8), fstart, flen)
+    toff = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(bf.tag_cnt, out=toff[1:])
+    goff = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(bf.geom_cnt, out=goff[1:])
+    return bf, toff, goff
+
+
+def parse_raw_tile(data: bytes, layers=None) -> list[RawLayer]:
+    """Parse MVT bytes to raw protobuf-level layers (Tile.layers, field 3),
+    with every feature materialized as a RawFeature.
+
+    The per-tile path: decode_tile and the scalar twins build on it, and
+    it raises on malformed input. A tile with at least
+    _BATCH_MIN_FEATURES features wire-parses them in one
+    fastdecode.parse_features_batch call; an irregular lane (see
+    fastdecode) is re-read by the scalar _parse_feature, which raises or
+    decodes it as the per-feature parser does for smaller tiles. A layer
+    with no irregular lane carries the batch arrays in
+    ``RawLayer.batch``. Whole columns of tiles parse with
+    parse_tile_column instead, which pays the batch setup once per
+    column.
+
+    ``layers`` (an iterable of names) enables LAYER-SELECTIVE partial
+    decode — the reference's lazy-decode property (one layer of roads.mvt
+    in 6.4ms vs 9.8ms full, bench/Bench.hs:63-67) on the ingest path: a
+    non-matching layer message costs one name peek plus a length skip,
+    never feature/key/value parsing. Our encoder writes the name first,
+    so the peek usually touches only the message's leading bytes."""
+    buf = memoryview(data).cast("B")
+    walked = _walk_tile(buf, 0, len(buf), None if layers is None else set(layers))
+    all_spans = [sp for _, fspans in walked for sp in fspans]
+    if len(all_spans) < _BATCH_MIN_FEATURES:
         for layer, fspans in walked:
             layer.features = [_parse_feature(buf[s:s + n]) for s, n in fspans]
         return [layer for layer, _ in walked]
-
-    # ONE whole-tile batch wire parse over every feature of every layer —
-    # per-layer calls would pay the fixed vectorization setup 15x on a
-    # roads-shaped tile
+    bf, toff, goff = _parse_spans(buf, all_spans)
     from . import fastdecode
 
-    b = np.frombuffer(buf, dtype=np.uint8)
-    all_spans = [sp for _, fspans in walked for sp in fspans]
-    fstart = np.fromiter((s for s, _ in all_spans), dtype=np.int64, count=total)
-    flen = np.fromiter((n for _, n in all_spans), dtype=np.int64, count=total)
-    bf = fastdecode.parse_features_batch(b, fstart, flen)
-    toff = np.cumsum(bf.tag_cnt) - bf.tag_cnt
-    goff = np.cumsum(bf.geom_cnt) - bf.geom_cnt
     base = 0
     for layer, fspans in walked:
         nf = len(fspans)
@@ -351,26 +381,104 @@ def parse_raw_tile(data: bytes, layers=None) -> list[RawLayer]:
                 feats.append(
                     RawFeature(
                         id=int(bf.ids[i]),
-                        tags=bf.tag_vals[toff[i]:toff[i] + bf.tag_cnt[i]],
+                        tags=bf.tag_vals[toff[i]:toff[i + 1]],
                         type=int(bf.types[i]),
-                        geometry=bf.geom_vals[goff[i]:goff[i] + bf.geom_cnt[i]],
+                        geometry=bf.geom_vals[goff[i]:goff[i + 1]],
                     )
                 )
         layer.features = feats
-        if nf and not bf.irregular[base:base + nf].any():
-            lo, hi = base, base + nf
-            g0 = goff[lo]
-            g1 = goff[hi - 1] + bf.geom_cnt[hi - 1]
-            t0 = toff[lo]
-            t1 = toff[hi - 1] + bf.tag_cnt[hi - 1]
+        lo, hi = base, base + nf
+        if nf and not bf.irregular[lo:hi].any():
             layer.batch = fastdecode.BatchFeatures(
                 bf.ids[lo:hi], bf.types[lo:hi],
-                bf.tag_vals[t0:t1], bf.tag_cnt[lo:hi],
-                bf.geom_vals[g0:g1], bf.geom_cnt[lo:hi],
+                bf.tag_vals[toff[lo]:toff[hi]], bf.tag_cnt[lo:hi],
+                bf.geom_vals[goff[lo]:goff[hi]], bf.geom_cnt[lo:hi],
                 bf.irregular[lo:hi],
             )
-        base += nf
+        base = hi
     return [layer for layer, _ in walked]
+
+
+class TileBatch:
+    """A column of tiles wire-parsed at once (parse_tile_column).
+
+    ``layers`` holds every walked layer, tile by tile in wire order, with
+    names, keys, values, extent and version but no RawFeature objects;
+    layer j belongs to tile ``layer_tile[j]`` and owns features
+    ``layer_feat[j]:layer_feat[j + 1]`` of ``feats``, whose tag and
+    geometry values start at ``toff``/``goff``. Tile i owns layers
+    ``tile_layer[i]:tile_layer[i + 1]``. ``scalar[i]`` marks a tile the
+    arrays do not describe: a NULL entry, framing the walk rejected, or
+    a feature fastdecode flagged irregular. Such a tile goes whole through
+    the per-tile path (parse_raw_tile / decode_tile), which raises or
+    decodes it exactly as before."""
+
+    __slots__ = ("layers", "layer_tile", "layer_feat", "tile_layer", "feats",
+                 "toff", "goff", "scalar")
+
+    def layer_cols(self, j: int):
+        """(ids, types, tag_vals, tag_cnt, geom_vals, geom_cnt) of layer j."""
+        f0, f1 = int(self.layer_feat[j]), int(self.layer_feat[j + 1])
+        f = self.feats
+        return (
+            f.ids[f0:f1], f.types[f0:f1],
+            f.tag_vals[self.toff[f0]:self.toff[f1]], f.tag_cnt[f0:f1],
+            f.geom_vals[self.goff[f0]:self.goff[f1]], f.geom_cnt[f0:f1],
+        )
+
+
+def parse_tile_column(col, layers=None) -> TileBatch:
+    """Wire-parse every tile of an Arrow binary column in one pass.
+
+    Each tile's layer framing is walked in place inside the column's
+    single data buffer (no per-tile bytes copy), and the feature messages
+    of ALL tiles parse in ONE fastdecode.parse_features_batch call — the
+    batch-at-a-time boundary crossing that makes decode_tiles and
+    overzoom_tiles pay the vectorization setup once per Arrow batch, not
+    once per tile. ``layers`` selects layers by name as in parse_raw_tile.
+    Walk errors are not raised here: the tile is marked ``scalar`` and the
+    per-tile path raises them at the tile's turn."""
+    import pyarrow as pa
+
+    n = len(col)
+    wide = pa.types.is_large_binary(col.type)
+    bufs = col.buffers()
+    width = 8 if wide else 4
+    off = np.frombuffer(
+        bufs[1], dtype=np.int64 if wide else np.int32, count=n + 1,
+        offset=col.offset * width,
+    ).astype(np.int64) if n else np.zeros(1, np.int64)
+    buf = memoryview(bufs[2] if bufs[2] is not None else b"").cast("B")
+    scalar = np.zeros(n, dtype=bool)
+    if col.null_count:
+        scalar |= ~col.is_valid().to_numpy(zero_copy_only=False)
+    want = None if layers is None else set(layers)
+    out_layers: list[RawLayer] = []
+    layer_tile: list[int] = []
+    nfeat: list[int] = []
+    spans: list[tuple[int, int]] = []
+    for i in np.flatnonzero(~scalar).tolist():
+        try:
+            walked = _walk_tile(buf, int(off[i]), int(off[i + 1]), want)
+        except Exception:
+            scalar[i] = True
+            continue
+        for layer, fspans in walked:
+            out_layers.append(layer)
+            layer_tile.append(i)
+            nfeat.append(len(fspans))
+            spans.extend(fspans)
+    tb = TileBatch()
+    tb.layers = out_layers
+    tb.layer_tile = np.asarray(layer_tile, dtype=np.int64)
+    tb.layer_feat = np.zeros(len(out_layers) + 1, dtype=np.int64)
+    np.cumsum(np.asarray(nfeat, dtype=np.int64), out=tb.layer_feat[1:])
+    tb.tile_layer = np.searchsorted(tb.layer_tile, np.arange(n + 1))
+    tb.feats, tb.toff, tb.goff = _parse_spans(buf, spans)
+    feat_tile = np.repeat(tb.layer_tile, np.diff(tb.layer_feat))
+    scalar[feat_tile[tb.feats.irregular]] = True
+    tb.scalar = scalar
+    return tb
 
 
 # ---------------- raw -> canonical (fromProtobuf, Internal.hs:96-112) ----------------
@@ -635,6 +743,32 @@ def _first_appearance(run: np.ndarray, item: np.ndarray, k: int, n_runs: int):
     return rank[inv] - run_first[run], u[perm] % k, np.bincount(u_run, minlength=n_runs)
 
 
+def _run_key_order(codes: np.ndarray, rid: np.ndarray, n_runs: int, p_run, p_col):
+    """Per-run key dictionaries from one first-row pass per column.
+
+    Pairs are taken row by row in column order, so a run's keys appear in
+    the order of (first row using the column, column). A column's first
+    row in each run is the first of its non-NULL rows after the run
+    changes; ranking the C columns of every run then costs an n_runs x C
+    argsort instead of a sort over all n x C (feature, column) pairs.
+
+    Returns what _first_appearance returns for (p_run, p_col)."""
+    n, C = codes.shape
+    first = np.full((n_runs, C), n, dtype=np.int64)  # n: column unused
+    for c in range(C):
+        rows = np.flatnonzero(codes[:, c] >= 0)
+        if len(rows):
+            r = rid[rows]
+            head = np.concatenate([[True], r[1:] != r[:-1]])
+            first[r[head], c] = rows[head]
+    order = np.argsort(first * max(C, 1) + np.arange(C), axis=1, kind="stable")
+    rank = np.empty_like(order)
+    np.put_along_axis(rank, order, np.arange(C)[None, :], axis=1)
+    used = first < n
+    key_items = order[np.take_along_axis(used, order, axis=1)]
+    return rank[p_run, p_col], key_items, used.sum(axis=1)
+
+
 def _gather_runs(buf: np.ndarray, off: np.ndarray, items: np.ndarray, cnt: np.ndarray):
     """Entries ``items`` of the table (buf, off) laid end to end, and the
     byte length of each run's block of ``cnt`` entries."""
@@ -711,7 +845,7 @@ def encode_multi_tile_batch(
     p_run = rid[p_row]
     vid, vbase, vbuf, voff = _shared_value_table(meta_cols)
     p_val = vid[codes[p_row, p_col] + vbase[p_col]]
-    key_local, key_items, key_cnt = _first_appearance(p_run, p_col, C, n_runs)
+    key_local, key_items, key_cnt = _run_key_order(codes, rid, n_runs, p_run, p_col)
     val_local, val_items, val_cnt = _first_appearance(
         p_run, p_val, len(voff) - 1, n_runs
     )

@@ -21,7 +21,7 @@ Contrast: rebuilding z+k from source features pays a full feature
 shuffle into the encode; overzoom pays a parse + clip + encode per
 parent, all executor-local.
 
-One lane: a task parses each parent once into its wire arrays, splits
+One lane: a task wire-parses each Arrow batch of parents once, splits
 the features into child rows that keep their parent's (key, value)
 index codes, and encodes all child rows of its batch in one
 codec.encode_multi_tile_batch call per layer shape. The kernel builds the
@@ -79,8 +79,12 @@ def overzoom_blob(
 
     Runs the batched kernel (_overzoom_rows), byte-identical to the
     scalar twin below (differential-pinned in tests/test_overzoom.py)."""
+    import pyarrow as pa
+
+    zero = np.zeros(1, np.int64)
     _, xs, ys, ms, nfs, nls = _overzoom_rows(
-        [(0, 0, 0, data)], levels=levels, buffer_px=buffer_px
+        zero, zero, zero, pa.array([bytes(data)], pa.binary()),
+        levels=levels, buffer_px=buffer_px,
     )
     return list(zip(xs, ys, ms, nfs, nls))
 
@@ -237,10 +241,10 @@ def _split_feature(gt: int, geom, ext: int, s: int, b: int):
     raise ValueError("Geometry type of UNKNOWN given.")
 
 
-def _raw_gate(raws):
-    """Columns (ids, types, tag_vals, tag_cnt, geom_vals, geom_cnt) of
-    every layer of a parsed parent when the parent can take the
-    vectorized lane, else None.
+def _raw_gate(raws, cols):
+    """True when a parsed parent (its layers ``raws`` and their column
+    tuples ``cols``: ids, types, tag_vals, tag_cnt, geom_vals, geom_cnt)
+    can take the vectorized lane.
 
     The lane must write what decode_tile -> encode_tile writes, so the
     gate PROVES what it relies on: unique layer names (decode_tile keeps
@@ -249,42 +253,24 @@ def _raw_gate(raws):
     (decode_tile raises otherwise); even tag counts; key indices strictly
     increasing within each feature, so a feature's pairs come in key
     column order, the order its decoded dict lists them; every index in
-    range. Columns come from the wire parser's batch arrays, or from the
-    features it parsed one by one (small tiles, irregular wire)."""
+    range."""
     if len({r.name for r in raws}) != len(raws):
-        return None
-    out = []
-    for raw in raws:
-        if not raw.features or len(set(raw.keys)) != len(raw.keys):
-            return None
-        if raw.batch is not None:
-            bt = raw.batch
-            cols = (bt.ids, bt.types, bt.tag_vals, bt.tag_cnt, bt.geom_vals, bt.geom_cnt)
-        else:
-            fs = raw.features
-            n = len(fs)
-            cols = (
-                np.fromiter((f.id for f in fs), np.uint64, n),
-                np.fromiter((f.type for f in fs), np.uint64, n),
-                np.concatenate([np.zeros(0, np.uint32)] + [f.tags for f in fs]),
-                np.fromiter((f.tags.size for f in fs), np.int64, n),
-                np.concatenate([np.zeros(0, np.uint32)] + [f.geometry for f in fs]),
-                np.fromiter((f.geometry.size for f in fs), np.int64, n),
-            )
-        types, tv, tc = cols[1], cols[2], cols[3]
+        return False
+    for raw, (_, types, tv, tc, _, _) in zip(raws, cols):
+        if not len(types) or len(set(raw.keys)) != len(raw.keys):
+            return False
         if not bool(((types >= GEOM_POINT) & (types <= GEOM_POLYGON)).all()):
-            return None
+            return False
         if bool((tc & 1).any()):
-            return None
+            return False
         kk = tv[0::2].astype(np.int64)
         if len(kk):
             if int(kk.max()) >= len(raw.keys) or int(tv[1::2].max()) >= len(raw.values):
-                return None
+                return False
             feat = np.repeat(np.arange(len(tc)), tc // 2)
             if bool(((feat[1:] == feat[:-1]) & (kk[1:] <= kk[:-1])).any()):
-                return None
-        out.append(cols)
-    return out
+                return False
+    return True
 
 
 def _layer_rows(cols, ext: int, s: int, b: int):
@@ -358,46 +344,54 @@ def _layer_rows(cols, ext: int, s: int, b: int):
     )
 
 
-def _overzoom_rows(parents, levels: int = 1, buffer_px: int = 0):
+def _overzoom_rows(tz, tx, ty, mvt, levels: int = 1, buffer_px: int = 0):
     """Batched overzoom kernel over MANY parents at once.
 
-    parents: iterable of (tile_z, tile_x, tile_y, mvt_bytes). Returns six
-    parallel lists (tile_z, tile_x, tile_y, mvt, n_features, n_layers),
-    children sorted by key.
+    Parents are the tile keys ``tz``/``tx``/``ty`` (integer arrays) and
+    the Arrow binary column ``mvt``. Returns six parallel lists (tile_z,
+    tile_x, tile_y, mvt, n_features, n_layers), children sorted by key.
 
     One lane, byte-identical to the scalar twin (pinned by the
-    differential suite): each parent is parsed once; every child row
-    carries its parent feature's (key index, value index) codes, the
-    parent layer's framed values table serves as the dictionary of every
-    key column, and ALL child rows of the batch encode in ONE
-    encode_multi_tile_batch call per (layer, extent, version, keys)
-    group; the kernel builds the same totalMeta dictionaries encode_layer
-    does. A parent _raw_gate rejects goes whole through
-    overzoom_blob_scalar, and its children join the same per-child frame
-    merge.
+    differential suite): the whole column wire-parses in one
+    codec.parse_tile_column call; every child row carries its parent
+    feature's (key index, value index) codes, the parent layer's framed
+    values table serves as the dictionary of every key column, and ALL
+    child rows of the batch encode in ONE encode_multi_tile_batch call
+    per (layer, extent, version, keys) group; the kernel builds the same
+    totalMeta dictionaries encode_layer does. A parent the parser marks
+    scalar or _raw_gate rejects goes whole through overzoom_blob_scalar,
+    at its turn, and its children join the same per-child frame merge.
     """
     _check_args(levels, buffer_px)
     s = 1 << levels
     frames: dict[tuple, list] = {}  # child key -> [(name, frame, nrows)]
     groups: dict[tuple, list] = {}  # (name, ext, version, keys) -> chunks
+    tb = codec.parse_tile_column(mvt)
 
-    for pz, ptx, pty, data in parents:
-        data = bytes(data)
+    for i, (pz, ptx, pty) in enumerate(zip(
+        np.asarray(tz).tolist(), np.asarray(tx).tolist(), np.asarray(ty).tolist()
+    )):
         z2 = pz + levels
-        raws = codec.parse_raw_tile(data)
-        gated = _raw_gate(raws)
-        if gated is None:
+        lays = range(int(tb.tile_layer[i]), int(tb.tile_layer[i + 1]))
+        raws = [tb.layers[j] for j in lays]
+        cols = [tb.layer_cols(j) for j in lays]
+        if tb.scalar[i] or not _raw_gate(raws, cols):
+            data = mvt[i].as_py()
+            if data is None:
+                raise ValueError(
+                    f"overzoom_tiles: column 'mvt' is NULL for tile z/x/y {pz}/{ptx}/{pty}"
+                )
             for cx, cy, blob, _, _ in overzoom_blob_scalar(data, levels, buffer_px):
                 frames.setdefault((z2, ptx * s + cx, pty * s + cy), []).extend(
                     codec.split_layer_frames(blob)
                 )
             continue
-        for raw, cols in zip(raws, gated):
+        for raw, lc in zip(raws, cols):
             ext = raw.extent if raw.extent is not None else codec.DEFAULT_EXTENT
-            cx, cy, src, gt, svals, slens = _layer_rows(cols, ext, s, buffer_px)
+            cx, cy, src, gt, svals, slens = _layer_rows(lc, ext, s, buffer_px)
             if not len(src):
                 continue
-            ids, _, tv, tc, _, _ = cols
+            ids, _, tv, tc, _, _ = lc
             n = len(ids)
             vcode = np.full((n, len(raw.keys)), -1, np.int64)
             vcode[np.repeat(np.arange(n), tc // 2), tv[0::2]] = tv[1::2]
@@ -474,13 +468,10 @@ def overzoom_tiles(
         import pyarrow as pa
 
         for batch in batches:
-            parents = zip(
-                batch.column("tile_z").to_pylist(),
-                batch.column("tile_x").to_pylist(),
-                batch.column("tile_y").to_pylist(),
-                batch.column("mvt").to_pylist(),
+            cz, cx, cy, cm, cnf, cnl = _overzoom_rows(
+                *(batch.column(c).to_numpy() for c in ("tile_z", "tile_x", "tile_y")),
+                batch.column("mvt"), levels, buffer_px,
             )
-            cz, cx, cy, cm, cnf, cnl = _overzoom_rows(parents, levels, buffer_px)
             if cz:
                 yield pa.record_batch(
                     [

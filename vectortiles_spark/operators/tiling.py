@@ -691,6 +691,226 @@ def encode_tiles(
     )
 
 
+def _meta_fields():
+    import pyarrow as pa
+
+    return [
+        pa.field("key", pa.string()), pa.field("tag", pa.int32()),
+        pa.field("s", pa.string()), pa.field("d", pa.float64()),
+        pa.field("i", pa.int64()), pa.field("b", pa.bool_()),
+    ]
+
+
+def _decode_tile_rows(data: bytes, layers, extent: int) -> list[tuple]:
+    """The per-tile path of decode_tiles: (layer, geom_type, feature_id,
+    meta, geom_cmds) rows of one tile, decoded layer by layer as
+    decode_tile decodes them, so it raises what decode_tile raises; a
+    layer whose extent is not ``extent`` raises ValueError before its
+    features are decoded. Shadowed layers (an earlier layer of a repeated name; decode_tile
+    keeps the last) are decoded and checked, but emit no rows."""
+    from ..mvt.geometry import geom_to_stream
+
+    raws = codec.parse_raw_tile(data, layers=layers)
+    last_of_name = {r.name: r for r in raws}
+    rows = []
+    for raw in raws:
+        if not raw.features:
+            raise ValueError("VectorTile.features: `[RawFeature]` empty")
+        layer_ext = raw.extent if raw.extent is not None else codec.DEFAULT_EXTENT
+        if layer_ext != extent:
+            raise ValueError(
+                f"decode_tiles: layer {raw.name!r} declares extent "
+                f"{layer_ext}, expected {extent} — pass "
+                "decode_tiles(..., extent=...) and re-encode with "
+                "the same value (the feature schema carries no "
+                "extent column, so a mismatch would silently "
+                "mis-scale coordinates)"
+            )
+        layer = codec.layer_from_raw(raw)
+        if last_of_name[raw.name] is not raw:
+            continue
+        for f in layer.features:
+            fid = f.feature_id
+            rows.append((
+                raw.name, f.geom_type,
+                # wire carries uint64 ids; Spark BIGINT is signed
+                fid - (1 << 64) if fid >= (1 << 63) else fid,
+                [
+                    {
+                        "key": k,
+                        "tag": tag,
+                        "s": v if tag == codec.VAL_STRING else None,
+                        "d": float(v) if tag in (codec.VAL_FLOAT, codec.VAL_DOUBLE) else None,
+                        "i": int(v) if tag in (codec.VAL_INT, codec.VAL_UINT, codec.VAL_SINT) else None,
+                        "b": bool(v) if tag == codec.VAL_BOOL else None,
+                    }
+                    for k, (tag, v) in sorted(f.metadata.items())
+                ],
+                geom_to_stream(f.geom_type, f.geom),
+            ))
+    return rows
+
+
+def _decode_batch(b, layers, extent: int):
+    """decode_tiles' kernel: one Arrow batch of tiles -> feature rows.
+
+    Every tile's features wire-parse in one codec.parse_tile_column call,
+    and the rows are built from its batch arrays: ``meta`` from the
+    (key, value) index pairs gathered through the layers' key and value
+    tables, sorted by key within each feature as decode_tile's dict is;
+    ``geom_cmds`` straight from the command streams, which already are
+    geom_to_stream(geom_from_stream(s)) when canonical_stream_mask holds
+    (only the other streams are decoded and re-encoded). Row order is
+    tile, layer, then points, lines, polygons, as layer_from_raw sorts.
+
+    A tile whose arrays could raise or collapse goes whole through
+    _decode_tile_rows at its turn: one the parser marked scalar, an empty
+    layer, a foreign extent, a repeated layer name, an unknown geometry
+    type, an out-of-range tag index, a key string repeated within one
+    feature (a dict keeps only the last), a UINT value beyond BIGINT, or
+    a non-canonical stream that does not decode."""
+    import pyarrow as pa
+
+    from ..mvt import fastdecode, wire
+    from ..mvt.geometry import geom_from_stream, geom_to_stream
+
+    col = b.column("mvt")
+    tb = codec.parse_tile_column(col, layers=layers)
+    f = tb.feats
+    n = len(f.ids)
+    nfeat = np.diff(tb.layer_feat)
+    feat_layer = np.repeat(np.arange(len(tb.layers)), nfeat)
+    feat_tile = tb.layer_tile[feat_layer]
+    scalar = tb.scalar.copy()
+
+    # ---- layer checks; key and value tables of all layers end to end ----
+    keys, vals, seen = [], [], set()
+    key_base = np.zeros(len(tb.layers) + 1, np.int64)
+    val_base = np.zeros(len(tb.layers) + 1, np.int64)
+    for j, (t, lay) in enumerate(zip(tb.layer_tile.tolist(), tb.layers)):
+        ext = lay.extent if lay.extent is not None else codec.DEFAULT_EXTENT
+        if nfeat[j] == 0 or ext != extent or (t, lay.name) in seen:
+            scalar[t] = True
+        seen.add((t, lay.name))
+        keys.extend(lay.keys)
+        vals.extend(lay.values)
+        key_base[j + 1] = len(keys)
+        val_base[j + 1] = len(vals)
+    big = [j for j, (t, v) in enumerate(vals) if t == codec.VAL_UINT and v >= 1 << 63]
+    if big:
+        scalar[tb.layer_tile[np.searchsorted(val_base, big, side="right") - 1]] = True
+    scalar[feat_tile[(f.types < 1) | (f.types > 3)]] = True
+
+    # ---- (key, value) index pairs; odd trailing tags drop as in decode ----
+    npairs = f.tag_cnt // 2
+    pair_feat = np.repeat(np.arange(n), npairs)
+    pstart = np.cumsum(npairs) - npairs
+    kpos = tb.toff[pair_feat] + 2 * (np.arange(len(pair_feat)) - pstart[pair_feat])
+    pk = f.tag_vals[kpos].astype(np.int64)
+    pv = f.tag_vals[kpos + 1].astype(np.int64)
+    pl = feat_layer[pair_feat]
+    ok = (pk < np.diff(key_base)[pl]) & (pv < np.diff(val_base)[pl])
+    scalar[feat_tile[pair_feat[~ok]]] = True
+    rank = {k: r for r, k in enumerate(sorted(set(keys)))}
+    key_rank = np.fromiter((rank[k] for k in keys), np.int64, len(keys))
+    gk = np.where(ok, key_base[pl] + pk, 0)
+    kr = key_rank[gk] if len(keys) else gk
+    o = np.lexsort((kr, pair_feat))
+    dup = (pair_feat[o][1:] == pair_feat[o][:-1]) & (kr[o][1:] == kr[o][:-1]) & ok[o][1:]
+    scalar[feat_tile[pair_feat[o][1:][dup]]] = True
+
+    # ---- non-canonical streams: decode + re-encode (or defer the tile) ----
+    canon = fastdecode.canonical_stream_mask(f.types, f.geom_vals, f.geom_cnt)
+    gsrc = [f.geom_vals]
+    gstart, glen = tb.goff[:-1].copy(), f.geom_cnt.copy()
+    top = len(f.geom_vals)
+    for i in np.flatnonzero(~canon & ~scalar[feat_tile]).tolist():
+        gt = int(f.types[i])
+        try:
+            s = geom_to_stream(gt, geom_from_stream(gt, f.geom_vals[tb.goff[i]:tb.goff[i + 1]]))
+        except Exception:
+            scalar[feat_tile[i]] = True
+            continue
+        gsrc.append(np.asarray(s, np.uint32))
+        gstart[i], glen[i] = top, len(s)
+        top += len(s)
+
+    # ---- rows of the tiles the arrays describe ----
+    idx = np.flatnonzero(~scalar[feat_tile])
+    order = idx[np.lexsort((f.types[idx], feat_layer[idx]))]
+    rowpos = np.zeros(n, np.int64)
+    rowpos[order] = np.arange(len(order))
+    sel = np.flatnonzero(~scalar[feat_tile[pair_feat]])
+    o = np.lexsort((kr[sel], rowpos[pair_feat[sel]]))
+    gk_s = gk[sel][o]
+    gv_s = (val_base[pl] + pv)[sel][o]
+    moff = np.zeros(len(order) + 1, np.int32)
+    np.cumsum(npairs[order], out=moff[1:])
+    vt = [t for t, _ in vals]
+    entries = pa.StructArray.from_arrays([
+        pa.array(keys, pa.string()).take(gk_s),
+        pa.array(vt, pa.int32()).take(gv_s),
+        pa.array([v if t == codec.VAL_STRING else None for t, v in vals], pa.string()).take(gv_s),
+        pa.array([float(v) if t in (codec.VAL_FLOAT, codec.VAL_DOUBLE) else None
+                  for t, v in vals], pa.float64()).take(gv_s),
+        pa.array([v if t in (codec.VAL_INT, codec.VAL_SINT)
+                  or (t == codec.VAL_UINT and v < 1 << 63) else None
+                  for t, v in vals], pa.int64()).take(gv_s),
+        pa.array([bool(v) if t == codec.VAL_BOOL else None for t, v in vals],
+                 pa.bool_()).take(gv_s),
+    ], fields=_meta_fields())
+    coff = np.zeros(len(order) + 1, np.int32)
+    np.cumsum(glen[order], out=coff[1:])
+    cmds = wire.ragged_gather(np.concatenate(gsrc), gstart[order], glen[order])
+    rt = pa.array(feat_tile[order])
+    cols = [
+        b.column("tile_z").take(rt).cast(pa.int32()),
+        b.column("tile_x").take(rt).cast(pa.int32()),
+        b.column("tile_y").take(rt).cast(pa.int32()),
+        pa.array([lay.name for lay in tb.layers], pa.string()).take(pa.array(feat_layer[order])),
+        pa.array(f.types[order].astype(np.int32)),
+        pa.array(f.ids[order].view(np.int64)),
+        pa.ListArray.from_arrays(pa.array(moff), entries),
+        pa.ListArray.from_arrays(pa.array(coff), pa.array(cmds.astype(np.int64))),
+    ]
+    names = ["tile_z", "tile_x", "tile_y", "layer", "geom_type", "feature_id", "meta", "geom_cmds"]
+    if not scalar.any():
+        return pa.RecordBatch.from_arrays(cols, names=names)
+
+    # ---- the other tiles through the per-tile path, at their turn ----
+    zs, xs, ys = (b.column(c).to_pylist() for c in ("tile_z", "tile_x", "tile_y"))
+    tiles, rows = [], []
+    for t in np.flatnonzero(scalar).tolist():
+        data = col[t].as_py()
+        if data is None:
+            raise ValueError(
+                f"decode_tiles: column 'mvt' is NULL for tile z/x/y {zs[t]}/{xs[t]}/{ys[t]}"
+            )
+        for r in _decode_tile_rows(data, layers, extent):
+            tiles.append(t)
+            rows.append((zs[t], xs[t], ys[t]) + r)
+    streams = [np.asarray(r[7], np.int64) for r in rows]
+    soff = np.zeros(len(rows) + 1, np.int32)
+    np.cumsum([len(s) for s in streams], out=soff[1:])
+    more = [
+        pa.array([r[0] for r in rows], pa.int32()),
+        pa.array([r[1] for r in rows], pa.int32()),
+        pa.array([r[2] for r in rows], pa.int32()),
+        pa.array([r[3] for r in rows], pa.string()),
+        pa.array([r[4] for r in rows], pa.int32()),
+        pa.array([r[5] for r in rows], pa.int64()),
+        pa.array([r[6] for r in rows], pa.list_(pa.struct(_meta_fields()))),
+        pa.ListArray.from_arrays(
+            pa.array(soff),
+            pa.array(np.concatenate(streams) if streams else np.zeros(0, np.int64)),
+        ),
+    ]
+    perm = pa.array(np.argsort(np.concatenate([feat_tile[order], tiles]), kind="stable"))
+    return pa.RecordBatch.from_arrays(
+        [pa.concat_arrays([a, m]).take(perm) for a, m in zip(cols, more)], names=names
+    )
+
+
 def decode_tiles(
     tiles: DataFrame,
     layers: list[str] | None = None,
@@ -712,138 +932,19 @@ def decode_tiles(
     schema carries no extent column, so a silent mismatch would leave
     downstream consumers mis-scaling the pixel coordinates by up to 8x —
     a non-default extent raises instead, telling the caller to pass it
-    and to re-encode with the same value).
+    and to re-encode with the same value). A NULL ``mvt`` raises a
+    ValueError naming the tile.
 
-    Fast path (round 4): raw-layer wire parse (fastdecode batch kernels)
-    plus canonical-stream pass-through — geom_to_stream(geom_from_stream(s))
-    is s itself for streams in canonical encoder form (zig/parse_cmd are
-    exact inverses), so those features never materialize geometry objects;
-    only non-canonical streams take the scalar decode+re-encode detour,
-    which rejects exactly the same inputs decode_tile rejects. (Error
-    IDENTITY can differ on multiply-malformed layers: decode_tiles walks
-    features in type-sorted emit order, decode_tile in original order, so
-    whichever bad feature comes first under each order raises first.)
-    """
-    import pyarrow as pa
-
-    from ..mvt import fastdecode
-    from ..mvt.geometry import geom_from_stream, geom_to_stream
+    Each Arrow batch is decoded whole (_decode_batch): one wire parse
+    for all its tiles, rows built from the parsed arrays with Arrow
+    offsets, no Python object per feature. Rows equal decode_tile's
+    features, and a tile the batch arrays cannot vouch for is decoded by
+    the per-tile path, which raises what decode_tile raises (the
+    differential suite tests/test_decode_differential.py pins both)."""
 
     def run(batches):
         for b in batches:
-            rows = {k: [] for k in (
-                "tile_z", "tile_x", "tile_y", "layer", "geom_type",
-                "feature_id", "meta",
-            )}
-            cmd_chunks: list[np.ndarray] = []
-            cmd_lens: list[int] = []
-            for z, x, y, raw in zip(
-                b["tile_z"].to_pylist(), b["tile_x"].to_pylist(),
-                b["tile_y"].to_pylist(), b["mvt"].to_pylist(),
-            ):
-                raws = codec.parse_raw_tile(raw, layers=layers)
-                # duplicate layer names: decode_tile's dict keeps the LAST
-                # message per name — emit rows only for that one, but still
-                # validate the shadowed layers (decode_tile decodes them too,
-                # so malformed input must raise identically)
-                last_of_name = {rl.name: rl for rl in raws}
-                for rl in raws:
-                    emit = last_of_name[rl.name] is rl
-                    if not rl.features:
-                        raise ValueError("VectorTile.features: `[RawFeature]` empty")
-                    layer_ext = rl.extent if rl.extent is not None else codec.DEFAULT_EXTENT
-                    if layer_ext != extent:
-                        raise ValueError(
-                            f"decode_tiles: layer {rl.name!r} declares extent "
-                            f"{layer_ext}, expected {extent} — pass "
-                            "decode_tiles(..., extent=...) and re-encode with "
-                            "the same value (the feature schema carries no "
-                            "extent column, so a mismatch would silently "
-                            "mis-scale coordinates)"
-                        )
-                    nf = len(rl.features)
-                    if rl.batch is not None:
-                        types, cnt, streams = rl.batch.types, rl.batch.geom_cnt, rl.batch.geom_vals
-                    else:
-                        types = np.fromiter((rf.type for rf in rl.features), np.int64, count=nf)
-                        cnt = np.fromiter((rf.geometry.size for rf in rl.features), np.int64, count=nf)
-                        streams = (
-                            np.concatenate([np.asarray(rf.geometry, np.uint32) for rf in rl.features])
-                            if int(cnt.sum()) else np.zeros(0, np.uint32)
-                        )
-                    canon = fastdecode.canonical_stream_mask(types, streams, cnt)
-                    offs = np.cumsum(cnt) - cnt
-                    # points first, then lines, then polygons (stable) —
-                    # the order layer_from_raw's sort produces
-                    order = np.argsort(types, kind="stable")
-                    for i in order.tolist():
-                        rf = rl.features[i]
-                        if rf.type not in (1, 2, 3):
-                            raise ValueError("Geometry type of UNKNOWN given.")
-                        if not emit:
-                            # shadowed duplicate-name layer: validate the
-                            # geometry AND the tag indices exactly like
-                            # decode_tile (layer_from_raw builds every
-                            # layer's metas before the dict collapses), then
-                            # drop the row
-                            if not canon[i]:
-                                geom_from_stream(rf.type, rf.geometry)
-                            stags = np.asarray(rf.tags, dtype=np.int64)
-                            stags = stags[: (stags.size // 2) * 2].reshape(-1, 2)
-                            for k, v in stags.tolist():
-                                rl.keys[k], rl.values[v]  # noqa: B018 — index check
-                            continue
-                        rows["tile_z"].append(z)
-                        rows["tile_x"].append(x)
-                        rows["tile_y"].append(y)
-                        rows["layer"].append(rl.name)
-                        rows["geom_type"].append(rf.type)
-                        # wire carries uint64 ids; Spark BIGINT is signed
-                        fid = rf.id
-                        rows["feature_id"].append(fid - (1 << 64) if fid >= (1 << 63) else fid)
-                        tags = np.asarray(rf.tags, dtype=np.int64)
-                        tags = tags[: (tags.size // 2) * 2].reshape(-1, 2)
-                        meta = {rl.keys[k]: rl.values[v] for k, v in tags.tolist()}
-                        rows["meta"].append([
-                            {
-                                "key": k,
-                                "tag": tag,
-                                "s": v if tag == codec.VAL_STRING else None,
-                                "d": float(v) if tag in (codec.VAL_FLOAT, codec.VAL_DOUBLE) else None,
-                                "i": int(v) if tag in (codec.VAL_INT, codec.VAL_UINT, codec.VAL_SINT) else None,
-                                "b": bool(v) if tag == codec.VAL_BOOL else None,
-                            }
-                            for k, (tag, v) in sorted(meta.items())
-                        ])
-                        if canon[i]:
-                            s = streams[offs[i]:offs[i] + cnt[i]]
-                        else:
-                            s = geom_to_stream(rf.type, geom_from_stream(rf.type, rf.geometry))
-                        cmd_chunks.append(s)
-                        cmd_lens.append(int(s.size))
-            all_cmds = (
-                np.concatenate(cmd_chunks).astype(np.int64)
-                if cmd_chunks else np.zeros(0, np.int64)
-            )
-            offsets = np.concatenate(([0], np.cumsum(cmd_lens, dtype=np.int64)))
-            yield pa.record_batch(
-                {
-                    "tile_z": pa.array(rows["tile_z"], pa.int32()),
-                    "tile_x": pa.array(rows["tile_x"], pa.int32()),
-                    "tile_y": pa.array(rows["tile_y"], pa.int32()),
-                    "layer": pa.array(rows["layer"], pa.string()),
-                    "geom_type": pa.array(rows["geom_type"], pa.int32()),
-                    "feature_id": pa.array(rows["feature_id"], pa.int64()),
-                    "meta": pa.array(rows["meta"], pa.list_(pa.struct([
-                        pa.field("key", pa.string()), pa.field("tag", pa.int32()),
-                        pa.field("s", pa.string()), pa.field("d", pa.float64()),
-                        pa.field("i", pa.int64()), pa.field("b", pa.bool_()),
-                    ]))),
-                    "geom_cmds": pa.ListArray.from_arrays(
-                        pa.array(offsets, pa.int32()), pa.array(all_cmds, pa.int64())
-                    ),
-                }
-            )
+            yield _decode_batch(b, layers, extent)
 
     return tiles.select("tile_z", "tile_x", "tile_y", "mvt").mapInArrow(run, FEATURE_SCHEMA)
 

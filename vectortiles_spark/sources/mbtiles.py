@@ -141,7 +141,9 @@ def read_mbtiles(
 
     Executors scan disjoint rowid ranges concurrently (sqlite b-tree range
     scans); ``z`` pushes a zoom filter into each task's SQL. Gzipped
-    tile_data is decompressed per blob (magic-sniffed)."""
+    tile_data is decompressed per blob (magic-sniffed). Range k is
+    partition k of ``spark.range(0, n, 1, n)``, with the bounds in the
+    closure, so the scan plans no exchange."""
     import pyarrow as pa
 
     if not os.path.exists(path):
@@ -164,7 +166,7 @@ def read_mbtiles(
         for b in batches:
             con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
             try:
-                for lo, hi in zip(b["lo"].to_pylist(), b["hi"].to_pylist()):
+                for lo, hi in (bounds[k] for k in b["id"].to_pylist()):
                     cur = con.execute(
                         "SELECT zoom_level, tile_column, tile_row, tile_data "
                         f"FROM tiles WHERE rowid >= ? AND rowid < ?{zoom_pred}",
@@ -189,8 +191,9 @@ def read_mbtiles(
             finally:
                 con.close()
 
-    ranges = spark.createDataFrame(bounds, "lo long, hi long").repartition(len(bounds))
-    return ranges.mapInArrow(scan, "tile_z int, tile_x int, tile_y int, mvt binary")
+    return spark.range(0, len(bounds), 1, len(bounds)).mapInArrow(
+        scan, "tile_z int, tile_x int, tile_y int, mvt binary"
+    )
 
 
 def read_metadata(path: str) -> dict:

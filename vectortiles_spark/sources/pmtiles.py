@@ -577,7 +577,9 @@ def read_pmtiles(
     push the zoom filter down to an id-range slice); executors re-parse
     it (small, local) and pread their slice's byte ranges — the same
     range-request pattern the format serves CDNs with, so reads
-    parallelize without any driver data path."""
+    parallelize without any driver data path. Split k is partition k of
+    ``spark.range(0, n, 1, n)``; its bounds travel in the closure, so the
+    scan plans no exchange."""
     import pyarrow as pa
 
     if not os.path.exists(path):
@@ -609,8 +611,8 @@ def read_pmtiles(
         data0 = hdr2["data_off"]
         with open(path, "rb") as f:
             for b in batches:
-                for lo, hi in zip(b["lo"].to_pylist(), b["hi"].to_pylist()):
-                    sl = slice(int(lo), int(hi))
+                for k in b["id"].to_pylist():
+                    sl = slice(*bounds[k])
                     # expand run-lengths: one output row per addressed id
                     out_ids, blobs = [], []
                     for tid, run, ln, off in zip(
@@ -634,8 +636,7 @@ def read_pmtiles(
                         "mvt": pa.array(blobs, pa.binary()),
                     })
 
-    ranges = spark.createDataFrame(bounds, "lo long, hi long").repartition(len(bounds))
-    return ranges.mapInArrow(scan, TILES_SCHEMA)
+    return spark.range(0, len(bounds), 1, len(bounds)).mapInArrow(scan, TILES_SCHEMA)
 
 
 def read_header(path: str) -> dict:

@@ -1,9 +1,12 @@
 """The stream encoder encodes every tile of a batch with the whole-batch
-kernel (codec.encode_multi_tile_batch); only tiles whose rows carry the
-per-feature struct ``meta`` form go through the reference layer encoder.
-This suite generates random feature batches with nulls, empty geometries,
-tiny/huge runs, multi-layer tiles and batch-carry splits, and asserts the
-tiles decode to what the reference-validated single-process codec says."""
+kernel (codec.encode_multi_tile_batch), whether its metadata comes as
+plain columns or as decode_tiles' per-feature struct ``meta``: both are
+flattened into per-feature (key, value) pairs, the kernel's one metadata
+input. This suite generates random feature batches with nulls, empty
+geometries, tiny/huge runs, multi-layer tiles and batch-carry splits,
+and asserts the tiles decode to what the reference-validated
+single-process codec says, and that the kernel's bytes equal the scalar
+reference encoder's."""
 
 import numpy as np
 import pyarrow as pa
@@ -154,8 +157,8 @@ def test_struct_meta_merges_plain_columns():
 
 
 def test_struct_meta_tile_leaves_other_tiles_bytes():
-    """Struct ``meta`` routes only its own tile to the reference encoder:
-    the other tiles of the batch keep the kernel's bytes."""
+    """Struct ``meta`` in one tile changes only that tile's bytes: the
+    other tiles of the batch keep theirs."""
     rng = np.random.default_rng(23)
     rows, _ = _random_rows(rng, n_tiles=6, max_feats=5, with_nulls=True)
     plain = pa.Table.from_batches([_batch(rows)])
@@ -212,28 +215,35 @@ def test_null_meta_tile_leaves_other_tiles_bytes():
 
 
 # metadata columns for the kernel-vs-reference test: two string columns
-# that share values, 64-bit ints past 2^53 and doubles with both zeros
+# that share values, 64-bit ints past 2^53, doubles with both zeros, and
+# one column of each remaining tag (FLOAT: two doubles that round to one
+# float32 are one wire value)
 _KERNEL_COLS = {
     "name": (codec.VAL_STRING, pa.string(), ["a", "b", "x", "long caption " * 12]),
     "alias": (codec.VAL_STRING, pa.string(), ["b", "x", "y"]),
     "big": (codec.VAL_INT, pa.int64(), [2**53, 2**53 + 1, -(2**60), 7]),
     "d": (codec.VAL_DOUBLE, pa.float64(), [0.0, -0.0, 1.5]),
+    "f32": (codec.VAL_FLOAT, pa.float64(), [0.0, -0.0, 1.5, 0.1, 0.1 + 1e-12]),
+    "u": (codec.VAL_UINT, pa.int64(), [0, 1, 2**53 + 1, 2**63 - 1]),
+    "zz": (codec.VAL_SINT, pa.int64(), [0, -1, -(2**62), 2**53 + 5, -(2**63)]),
+    "ok": (codec.VAL_BOOL, pa.bool_(), [True, False]),
 }
 
 
 @pytest.mark.parametrize("keys", [
     (), ("d",), ("name", "alias"), ("alias", "big", "d"), ("name", "alias", "big"),
+    ("f32", "u", "zz"), ("name", "d", "f32", "big", "u", "zz", "ok"),
 ], ids=lambda keys: "-".join(keys) or "none")
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_kernel_bytes_equal_reference_encoder(keys, seed):
     """Every (tile, layer) run the batch kernel writes is byte-identical to
     encode_layer_from_streams over the same features: keys only where a
     feature uses them, one value table shared by all keys, both in
-    first-appearance order — whole-run NULL columns, NULL first columns,
-    shared values, 0.0 / -0.0 and ints >= 2^53 included."""
+    first-appearance order, each feature's pairs in its own (shuffled)
+    key order — whole-run NULL columns, shared values, every value tag,
+    0.0 / -0.0 and ints >= 2^53 included."""
     rng = np.random.Generator(np.random.PCG64(seed))
-    rows = {c: [] for c in ("tz", "tx", "ty", "layer", "fid", "gt", "stream")}
-    vals = {k: [] for k in keys}
+    rows = {c: [] for c in ("tz", "tx", "ty", "layer", "fid", "gt", "stream", "meta")}
     want = {}
     for t in range(int(rng.integers(1, 12))):
         tile = (9, t, 3)
@@ -244,32 +254,37 @@ def test_kernel_bytes_equal_reference_encoder(keys, seed):
                 gt = int(rng.integers(1, 3))
                 x, y = (int(v) for v in rng.integers(0, 4096, 2))
                 stream = [9, x << 1, y << 1] + ([10, 2, 2] if gt == 2 else [])
-                meta = {}
-                for k in keys:
-                    tag, _, pool = _KERNEL_COLS[k]
-                    v = None if k in dead or rng.random() < 0.3 else pool[rng.integers(len(pool))]
-                    vals[k].append(v)
-                    if v is not None:
-                        meta[k] = (tag, v)
-                feats.append((int(rng.integers(-2**62, 2**62)), meta, gt, stream))
+                picks = [  # (key, pool index), in a shuffled key order
+                    (k, int(rng.integers(len(_KERNEL_COLS[k][2]))))
+                    for k in rng.permutation(list(keys)).tolist()
+                    if k not in dead and rng.random() >= 0.3
+                ]
+                feats.append((int(rng.integers(-2**62, 2**62)), picks, gt, stream))
             # the kernel takes rows in the sink's (geom_type, feature_id) order
-            order = sorted(range(len(feats)), key=lambda i: (feats[i][2], feats[i][0]))
-            for k in keys:
-                run = vals[k][-len(feats):]
-                vals[k][-len(feats):] = [run[i] for i in order]
-            feats = [feats[i] for i in order]
-            for fid, _, gt, stream in feats:
-                for c, v in zip(rows, (*tile, layer, fid, gt, stream)):
+            feats.sort(key=lambda f: (f[2], f[0]))
+            for fid, picks, gt, stream in feats:
+                for c, v in zip(rows, (*tile, layer, fid, gt, stream, picks)):
                     rows[c].append(v)
             want[tile] = want.get(tile, b"") + wire.len_delimited(3, codec.encode_layer_from_streams(
-                layer, [(f, m, g, np.asarray(st, np.uint32)) for f, m, g, st in feats]
+                layer, [
+                    (f, {k: (_KERNEL_COLS[k][0], _KERNEL_COLS[k][2][j]) for k, j in picks},
+                     g, np.asarray(st, np.uint32))
+                    for f, picks, g, st in feats
+                ]
             ))
-    meta_cols = []
+    # one framed value table per key, laid end to end; pairs row by row
+    tables, base = [], {}
     for k in keys:
-        tag, typ, _ = _KERNEL_COLS[k]
-        d = pa.array(vals[k], typ).dictionary_encode()
-        codes = pc.fill_null(d.indices, -1).to_numpy(zero_copy_only=False).astype(np.int64)
-        meta_cols.append((k, codes, *codec.frame_values_vec(tag, d.dictionary)))
+        tag, typ, pool = _KERNEL_COLS[k]
+        base[k] = sum(len(off) - 1 for _, off in tables)
+        tables.append(codec.frame_values_vec(tag, pa.array(pool, typ)))
+    pair_k = [keys.index(k) for picks in rows["meta"] for k, _ in picks]
+    pair_v = [base[k] + j for picks in rows["meta"] for k, j in picks]
+    meta = codec.MetaPairs(
+        list(keys), np.concatenate([[0], np.cumsum([len(m) for m in rows["meta"]])]).astype(np.int64),
+        np.asarray(pair_k, np.int64), np.asarray(pair_v, np.int64),
+        *codec.concat_value_tables(tables),
+    )
     lnames = ["a", "b", "c"]
     lens = [len(st) for st in rows["stream"]]
     mvts, starts, _ = codec.encode_multi_tile_batch(
@@ -277,9 +292,48 @@ def test_kernel_bytes_equal_reference_encoder(keys, seed):
         np.array([lnames.index(l) for l in rows["layer"]], np.int64), lnames,
         np.asarray(rows["fid"], np.int64), np.asarray(rows["gt"], np.int64),
         np.concatenate([np.asarray(st, np.uint32) for st in rows["stream"]]),
-        np.concatenate([[0], np.cumsum(lens)]).astype(np.int64), meta_cols,
+        np.concatenate([[0], np.cumsum(lens)]).astype(np.int64), meta,
     )
     got = {(9, rows["tx"][i], 3): m for i, m in zip(starts.tolist(), mvts)}
     assert got.keys() == want.keys()
     for tile in want:
         assert got[tile] == want[tile], tile
+
+
+def test_float_value_out_of_float32_range_raises():
+    """A FLOAT value no float32 can hold is a ValueError, as in the scalar
+    encoder, not a silent infinity."""
+    with pytest.raises(ValueError, match="float32 range"):
+        codec.frame_values_vec(codec.VAL_FLOAT, pa.array([1.0, 1e300]))
+    with pytest.raises(OverflowError):
+        codec._encode_value(codec.VAL_FLOAT, 1e300)
+
+
+def _struct_batch(entries):
+    """One point feature in tile 4/5/6 whose struct ``meta`` is ``entries``."""
+    return pa.record_batch({
+        "tile_z": pa.array([4], pa.int32()), "tile_x": pa.array([5], pa.int32()),
+        "tile_y": pa.array([6], pa.int32()), "layer": pa.array(["l"]),
+        "geom_type": pa.array([1], pa.int32()), "feature_id": pa.array([1], pa.int64()),
+        "meta": pa.array([entries], META_T),
+        "geom_cmds": pa.array([[9, 2, 2]], pa.list_(pa.int64())),
+    })
+
+
+@pytest.mark.parametrize("entry,what", [
+    ({"key": "k", "tag": 9, "s": "x"}, "unknown tag"),
+    ({"key": "k", "tag": None, "s": "x"}, "NULL or unknown tag"),
+    ({"key": None, "tag": codec.VAL_STRING, "s": "x"}, "NULL key"),
+    ({"key": "k", "tag": codec.VAL_DOUBLE}, "NULL 'd' under tag 3"),
+    ({"key": "k", "tag": codec.VAL_STRING}, "NULL 's' under tag 1"),
+    ({"key": "k", "tag": codec.VAL_INT}, "NULL 'i' under tag 4"),
+    ({"key": "k", "tag": codec.VAL_BOOL}, "NULL 'b' under tag 7"),
+    (None, "NULL entry"),
+], ids=["unknown-tag", "null-tag", "null-key", "null-d", "null-s", "null-i", "null-b", "null-entry"])
+def test_malformed_struct_meta_names_column_and_tile(entry, what):
+    """A struct ``meta`` entry the encoder cannot write is a ValueError
+    naming the column and the tile, never a silent drop or a bare
+    AttributeError/TypeError."""
+    good = {"key": "a", "tag": codec.VAL_STRING, "s": "ok"}
+    with pytest.raises(ValueError, match=rf"column 'meta' .*{what}.* tile z/x/y 4/5/6"):
+        list(_encode_stream(iter([_struct_batch([good, entry])])))

@@ -265,12 +265,24 @@ def _sink_two_key(n=320, seed=3):
 
 def _null_first_key():
     """Sink tile whose first feature has a NULL caption: keys come out
-    (score, caption), so later features carry non-monotone key indices
-    [1, v, 0, w] and the parent takes the scalar fallback."""
+    (score, caption), so later features carry decreasing key indices
+    [1, v, 0, w]; the kernel takes each feature's pairs in wire order."""
     rng = np.random.default_rng(4)
     return _sink_tile([
         (i + 1, rng.integers(0, 4096, 2).tolist(), None if i == 0 else f"c{i % 7}", i % 4)
         for i in range(40)
+    ])
+
+
+def _sparse_first_key(n=320, seed=5):
+    """Two-key sink tile with about half of the first column NULL, the
+    first feature's included: keys come out (score, caption), and the
+    features with a caption carry decreasing key indices throughout."""
+    rng = np.random.default_rng(seed)
+    return _sink_tile([
+        (i + 1, rng.integers(0, 4096, 2).tolist(),
+         None if i == 0 or rng.random() < 0.5 else f"caption {i % 150}", int(i % 5))
+        for i in range(n)
     ])
 
 
@@ -344,6 +356,7 @@ def _diff_cases():
         "sink-two-key": (_sink_two_key(), 1, 0),
         "sink-two-key-buf": (_sink_two_key(), 1, 8),
         "null-first-key": (_null_first_key(), 1, 0),
+        "sparse-first-key": (_sparse_first_key(), 1, 0),
         "repeated-key": (_repeated_key(), 1, 0),
         "two-key-mixed-geoms": (codec.encode_tile([_two_key_mixed()]), 1, 0),
         "roads-l1": (_roads, 1, 0),
@@ -376,9 +389,10 @@ def test_batched_kernel_byte_identical_to_scalar(case):
 
 def test_two_key_sink_parents_stay_on_vectorized_lane(monkeypatch):
     """Point-sink parents with two keys (small ones the wire parser reads
-    feature by feature, and big ones it reads as a batch) never reach the
-    scalar twin, and still match it byte for byte; a parent the gate
-    rejects does reach it."""
+    feature by feature, and big ones it reads as a batch, with NULLs in
+    the first column too) never reach the scalar twin, and still match it
+    byte for byte; a parent the gate rejects (a key repeated within one
+    feature) does reach it."""
     from vectortiles_spark.operators import overzoom
 
     rng = np.random.default_rng(8)
@@ -386,6 +400,7 @@ def test_two_key_sink_parents_stay_on_vectorized_lane(monkeypatch):
     parents.append(_sink_tile([
         (i + 1, rng.integers(0, 4096, 2).tolist(), "same", 0) for i in range(20)
     ]))
+    parents += [_null_first_key(), _sparse_first_key()]
     want = [overzoom.overzoom_blob_scalar(p) for p in parents]
 
     def fallback(*args, **kwargs):
@@ -394,7 +409,7 @@ def test_two_key_sink_parents_stay_on_vectorized_lane(monkeypatch):
     monkeypatch.setattr(overzoom, "overzoom_blob_scalar", fallback)
     assert [overzoom_blob(p) for p in parents] == want
     with pytest.raises(AssertionError, match="fallback"):
-        overzoom_blob(_null_first_key())
+        overzoom_blob(_repeated_key())
 
 
 def test_overzoom_tiles_null_mvt_names_the_tile(spark):

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import struct
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 import numpy as np
 
@@ -632,10 +633,10 @@ def encode_layer_from_streams(
     """Layer wire encode from (feature_id, metadata, geom_type, command_stream)
     tuples whose geometry is ALREADY a uint32 command stream.
 
-    The scalar reference for layer framing: encode_layer calls it, and
-    encode_tiles uses it for (tile, layer) runs whose features carry the
-    per-feature ARRAY<STRUCT> ``meta`` form (SURVEY.md §2.D8); every other
-    run goes through the whole-batch kernel encode_multi_tile_batch.
+    The scalar reference for layer framing: encode_layer calls it, and the
+    tests pin the whole-batch kernel encode_multi_tile_batch, which writes
+    every encode_tiles tile and overzoom child (struct ``meta`` included),
+    byte for byte against it.
 
     Contract per the reference: dictionaries layer-level (totalMeta,
     Internal.hs:321-329; first-appearance order where the reference's
@@ -648,11 +649,14 @@ def encode_layer_from_streams(
     value_list: list[tuple] = []
 
     def _vkey(tv: tuple) -> tuple:
-        # dedupe by BIT PATTERN for floats: Python's 0.0 == -0.0 would
-        # fold two distinct wire values into one slot (and diverge from
-        # the kernel's bitwise Arrow dictionaries)
+        # dedupe floats by their WIRE bit pattern: Python's 0.0 == -0.0
+        # would fold two distinct wire values into one slot, and two
+        # doubles that round to one float32 are one FLOAT value on the
+        # wire (the kernel dedupes by framed bytes)
         tag, v = tv
-        return (tag, struct.pack("<d", v)) if isinstance(v, float) else tv
+        if isinstance(v, float):
+            return (tag, struct.pack("<f" if tag == VAL_FLOAT else "<d", v))
+        return tv
 
     # geom_wire (optional): per-feature COMPLETE field-4 bytes aligned
     # with feats — lets encode_layer varint-encode the whole layer's
@@ -689,34 +693,50 @@ def encode_layer_from_streams(
     return body
 
 
-def _shared_value_table(meta_cols):
-    """One value table for every metadata column, de-duplicated by framed
-    bytes (tag plus bit pattern, the identity _vkey gives a value).
+class MetaPairs(NamedTuple):
+    """A batch's feature metadata as (key, value) index pairs, in each
+    feature's own order: feature i carries pairs off[i]:off[i + 1], pair
+    p names key ``keys[key[p]]`` and value entry ``val[p]`` of the framed
+    value table (vbuf, voff) (frame_values_vec's layout). Keys must be
+    distinct strings and no key may repeat within a feature; the value
+    table may hold one value more than once."""
 
-    Returns (id of each entry of the columns' tables laid end to end,
-    each column's first entry in that layout, unique framed buffer,
-    unique offsets)."""
+    keys: list
+    off: np.ndarray
+    key: np.ndarray
+    val: np.ndarray
+    vbuf: np.ndarray
+    voff: np.ndarray
+
+
+def concat_value_tables(tables):
+    """Framed value tables [(buf, off)] laid end to end, as one (buf, off)."""
+    bufs, offs, pos = [np.zeros(0, np.uint8)], [np.zeros(1, np.int64)], 0
+    for buf, off in tables:
+        off = np.asarray(off, dtype=np.int64)
+        bufs.append(np.asarray(buf, dtype=np.uint8)[off[0]:off[-1]])
+        offs.append(off[1:] - off[0] + pos)
+        pos += int(off[-1] - off[0])
+    return np.concatenate(bufs), np.concatenate(offs)
+
+
+def _unique_values(vbuf: np.ndarray, voff: np.ndarray):
+    """De-duplicate a framed value table by its bytes (tag plus bit
+    pattern, the identity _vkey gives a value).
+
+    Returns (id of each entry, unique framed buffer, unique offsets)."""
     import pyarrow as pa
 
-    data, starts, vbase = [np.zeros(0, np.uint8)], [np.zeros(0, np.int64)], []
-    pos = n_ent = 0
-    for _, _, fbuf, foff in meta_cols:
-        foff = np.asarray(foff, dtype=np.int64)
-        data.append(np.asarray(fbuf, dtype=np.uint8)[foff[0]:foff[-1]])
-        starts.append(foff[:-1] - foff[0] + pos)
-        pos += int(foff[-1] - foff[0])
-        vbase.append(n_ent)
-        n_ent += len(foff) - 1
-    off = np.concatenate(starts + [np.array([pos], np.int64)])
+    voff = np.asarray(voff, dtype=np.int64)
     table = pa.Array.from_buffers(
-        pa.large_binary(), n_ent,
-        [None, pa.py_buffer(off), pa.py_buffer(np.concatenate(data))],
+        pa.large_binary(), len(voff) - 1,
+        [None, pa.py_buffer(voff - voff[0]),
+         pa.py_buffer(np.asarray(vbuf, np.uint8)[voff[0]:voff[-1]])],
     ).dictionary_encode()
     uniq = table.dictionary
     ubuf = uniq.buffers()[2]
     return (
         table.indices.to_numpy(zero_copy_only=False).astype(np.int64),
-        np.asarray(vbase, dtype=np.int64),
         np.frombuffer(ubuf, np.uint8) if ubuf is not None else np.zeros(0, np.uint8),
         np.frombuffer(
             uniq.buffers()[1], np.int64, count=len(uniq) + 1, offset=uniq.offset * 8
@@ -743,30 +763,24 @@ def _first_appearance(run: np.ndarray, item: np.ndarray, k: int, n_runs: int):
     return rank[inv] - run_first[run], u[perm] % k, np.bincount(u_run, minlength=n_runs)
 
 
-def _run_key_order(codes: np.ndarray, rid: np.ndarray, n_runs: int, p_run, p_col):
-    """Per-run key dictionaries from one first-row pass per column.
+def _run_key_order(p_run: np.ndarray, p_key: np.ndarray, k: int, n_runs: int):
+    """Per-run key dictionaries in first-appearance order over the pairs.
 
-    Pairs are taken row by row in column order, so a run's keys appear in
-    the order of (first row using the column, column). A column's first
-    row in each run is the first of its non-NULL rows after the run
-    changes; ranking the C columns of every run then costs an n_runs x C
-    argsort instead of a sort over all n x C (feature, column) pairs.
+    One O(pairs) pass finds each (run, key)'s first pair, so ranking the
+    k keys of every run costs an n_runs x k argsort instead of a sort over
+    all pairs. First-pair indices are distinct, so the order has no ties.
 
-    Returns what _first_appearance returns for (p_run, p_col)."""
-    n, C = codes.shape
-    first = np.full((n_runs, C), n, dtype=np.int64)  # n: column unused
-    for c in range(C):
-        rows = np.flatnonzero(codes[:, c] >= 0)
-        if len(rows):
-            r = rid[rows]
-            head = np.concatenate([[True], r[1:] != r[:-1]])
-            first[r[head], c] = rows[head]
-    order = np.argsort(first * max(C, 1) + np.arange(C), axis=1, kind="stable")
+    Returns what _first_appearance returns for (p_run, p_key)."""
+    n_pairs = len(p_key)
+    first = np.full(n_runs * k, n_pairs, dtype=np.int64)  # n_pairs: key unused
+    np.minimum.at(first, p_run * k + p_key, np.arange(n_pairs, dtype=np.int64))
+    first = first.reshape(n_runs, k)
+    order = np.argsort(first, axis=1, kind="stable")
     rank = np.empty_like(order)
-    np.put_along_axis(rank, order, np.arange(C)[None, :], axis=1)
-    used = first < n
+    np.put_along_axis(rank, order, np.arange(k)[None, :], axis=1)
+    used = first < n_pairs
     key_items = order[np.take_along_axis(used, order, axis=1)]
-    return rank[p_run, p_col], key_items, used.sum(axis=1)
+    return rank[p_run, p_key], key_items, used.sum(axis=1)
 
 
 def _gather_runs(buf: np.ndarray, off: np.ndarray, items: np.ndarray, cnt: np.ndarray):
@@ -788,7 +802,7 @@ def encode_multi_tile_batch(
     gts: np.ndarray,
     geom_values: np.ndarray,
     geom_offsets: np.ndarray,
-    meta_cols: list[tuple[str, np.ndarray, np.ndarray, np.ndarray]],
+    meta: MetaPairs,
     version: int = 2,
     extent: int = DEFAULT_EXTENT,
 ):
@@ -801,18 +815,19 @@ def encode_multi_tile_batch(
     streams out: an empty feature would make the tile undecodable,
     Internal.hs:296).
 
-    meta_cols: [(key, codes_int64, framed_buf, framed_off)] — per-column
-    dictionary codes over the batch plus the framed value bytes of the
-    dictionary (frame_values_vec); keys must be distinct. A code of -1 is
-    NULL: that feature carries no [key, value] pair for the column.
+    meta: the batch's metadata as MetaPairs — each feature's (key, value)
+    pairs in its own order. Every tile goes through this one form:
+    encode_tiles flattens plain metadata columns and decode_tiles' struct
+    ``meta`` into it, overzoom hands over the parents' wire pairs.
 
     Each (tile, layer) run gets exactly the dictionaries
     encode_layer_from_streams builds (the reference's totalMeta,
     Internal.hs:321-329): the keys some feature of the run uses, and ONE
     value table shared by every key, de-duplicated by framed value bytes.
-    Both are in first-appearance order over the run's (feature, column)
-    pairs taken row by row, so tile bytes cannot depend on Arrow batch
-    layouts or on how the caller split values into column dictionaries.
+    Both are in first-appearance order over the run's pairs, and each
+    feature's tags list its pairs in the order given, so tile bytes cannot
+    depend on Arrow batch layouts or on how the caller split values into
+    tables.
 
     Returns (list_of_mvt_bytes_per_tile, tile_starts_rows, n_runs_per_tile)
     aligned with the unique tiles in row order.
@@ -835,19 +850,13 @@ def encode_multi_tile_batch(
     gb_len = byte_cum[geom_offsets[1:]] - byte_cum[geom_offsets[:-1]]
 
     # ---- metadata: per-run key and value dictionaries, vectorized ----
-    # a feature carries a [key, value] pair for each non-NULL code; taken
-    # row by row, the pairs meet the keys and values in totalMeta's order
-    C = len(meta_cols)
-    codes = np.empty((n, C), dtype=np.int64)
-    for k_idx, (_, col, _, _) in enumerate(meta_cols):
-        codes[:, k_idx] = col
-    p_row, p_col = np.nonzero(codes >= 0)
+    p_row = np.repeat(np.arange(n), np.diff(np.asarray(meta.off, dtype=np.int64)))
     p_run = rid[p_row]
-    vid, vbase, vbuf, voff = _shared_value_table(meta_cols)
-    p_val = vid[codes[p_row, p_col] + vbase[p_col]]
-    key_local, key_items, key_cnt = _run_key_order(codes, rid, n_runs, p_run, p_col)
+    p_key = np.asarray(meta.key, dtype=np.int64)
+    vid, vbuf, voff = _unique_values(meta.vbuf, meta.voff)
+    key_local, key_items, key_cnt = _run_key_order(p_run, p_key, len(meta.keys), n_runs)
     val_local, val_items, val_cnt = _first_appearance(
-        p_run, p_val, len(voff) - 1, n_runs
+        p_run, vid[np.asarray(meta.val, dtype=np.int64)], len(voff) - 1, n_runs
     )
     tags = np.empty(2 * len(p_row), dtype=np.uint64)
     tags[0::2] = key_local
@@ -856,7 +865,7 @@ def encode_multi_tile_batch(
     tag_lens = np.bincount(
         np.repeat(p_row, 2), weights=tvlens, minlength=n
     ).astype(np.int64)
-    key_frames = [wire.len_delimited(3, key.encode("utf-8")) for key, _, _, _ in meta_cols]
+    key_frames = [wire.len_delimited(3, key.encode("utf-8")) for key in meta.keys]
     keys_cat, run_keys_lens = _gather_runs(
         np.frombuffer(b"".join(key_frames), np.uint8),
         np.concatenate([[0], np.cumsum([len(f) for f in key_frames])]).astype(np.int64),
@@ -868,8 +877,8 @@ def encode_multi_tile_batch(
     ones = np.ones(n, dtype=np.int64)
     fid_buf, fid_lens = wire.encode_varints_with_lens(np.asarray(fids, np.int64).astype(np.uint64))
     glen_buf, glen_lens = wire.encode_varints_with_lens(gb_len.astype(np.uint64))
-    # a feature whose every metadata code is NULL has no tags field at
-    # all (not an empty one), like the reference encoder
+    # a feature without pairs has no tags field at all (not an empty
+    # one), like the reference encoder
     has_tags = tag_lens > 0
     tlen_buf, sub_lens = wire.encode_varints_with_lens(tag_lens[has_tags].astype(np.uint64))
     tlen_lens = np.zeros(n, dtype=np.int64)
@@ -965,17 +974,28 @@ def frame_values_vec(tag: int, arr) -> tuple[np.ndarray, np.ndarray]:
         msg, msg_lens = wire.ragged_stitch(
             [(np.full(n, 0x0A, np.uint8), ones), (lbuf, llens), (sbytes, lens)]
         )
-    elif tag == VAL_INT:
+    elif tag in (VAL_INT, VAL_UINT, VAL_SINT):
+        # 64-bit two's complement, as encode_varint reads a negative int
         vals = arr.to_numpy(zero_copy_only=False).astype(np.int64)
-        vbuf, vlens = wire.encode_varints_with_lens(vals.astype(np.uint64))
+        u = vals.view(np.uint64)
+        if tag == VAL_SINT:  # zigzag
+            u = (u << np.uint64(1)) ^ (vals >> 63).view(np.uint64)
+        vbuf, vlens = wire.encode_varints_with_lens(u)
         msg, msg_lens = wire.ragged_stitch(
-            [(np.full(n, 0x20, np.uint8), ones), (vbuf, vlens)]
+            [(np.full(n, tag << 3, np.uint8), ones), (vbuf, vlens)]
         )
-    elif tag == VAL_DOUBLE:
+    elif tag in (VAL_FLOAT, VAL_DOUBLE):
+        # little-endian float32 bits (fixed32) or float64 bits (fixed64)
+        size, wt = (4, wire.WT_FIXED32) if tag == VAL_FLOAT else (8, wire.WT_FIXED64)
         vals = arr.to_numpy(zero_copy_only=False).astype(np.float64)
-        raw = vals.view(np.uint8).reshape(n, 8).ravel() if n else np.zeros(0, np.uint8)
+        with np.errstate(over="ignore"):
+            cast = vals.astype(f"<f{size}")
+        if bool((np.isfinite(vals) & ~np.isfinite(cast)).any()):
+            # _encode_value raises here too (struct.pack's OverflowError)
+            raise ValueError("FLOAT value out of float32 range")
+        raw = cast.view(np.uint8)
         msg, msg_lens = wire.ragged_stitch(
-            [(np.full(n, 0x19, np.uint8), ones), (raw, np.full(n, 8, np.int64))]
+            [(np.full(n, (tag << 3) | wt, np.uint8), ones), (raw, np.full(n, size, np.int64))]
         )
     elif tag == VAL_BOOL:
         vals = arr.to_numpy(zero_copy_only=False).astype(np.uint8)

@@ -22,8 +22,8 @@ shuffle into the encode; overzoom pays a parse + clip + encode per
 parent, all executor-local.
 
 One lane: a task wire-parses each Arrow batch of parents once, splits
-the features into child rows that keep their parent's (key, value)
-index codes, and encodes all child rows of its batch in one
+the features into child rows that keep their parent's wire (key, value)
+index pairs, and encodes all child rows of its batch in one
 codec.encode_multi_tile_batch call per layer shape. The kernel builds the
 same per-layer dictionaries the reference encoder does, so the children
 are byte-identical to decode_tile -> split -> encode_tile, the scalar
@@ -250,9 +250,9 @@ def _raw_gate(raws, cols):
     gate PROVES what it relies on: unique layer names (decode_tile keeps
     the last of a name) and unique keys (a decoded metadata dict would
     merge them); every layer non-empty with known geometry types
-    (decode_tile raises otherwise); even tag counts; key indices strictly
-    increasing within each feature, so a feature's pairs come in key
-    column order, the order its decoded dict lists them; every index in
+    (decode_tile raises otherwise); even tag counts; no key repeated
+    within a feature, so its decoded dict lists the feature's pairs in
+    wire order, the order the kernel takes them in; every index in
     range."""
     if len({r.name for r in raws}) != len(raws):
         return False
@@ -267,8 +267,8 @@ def _raw_gate(raws, cols):
         if len(kk):
             if int(kk.max()) >= len(raw.keys) or int(tv[1::2].max()) >= len(raw.values):
                 return False
-            feat = np.repeat(np.arange(len(tc)), tc // 2)
-            if bool(((feat[1:] == feat[:-1]) & (kk[1:] <= kk[:-1])).any()):
+            fk = np.sort(np.repeat(np.arange(len(tc)), tc // 2) * len(raw.keys) + kk)
+            if bool((fk[1:] == fk[:-1]).any()):
                 return False
     return True
 
@@ -354,11 +354,11 @@ def _overzoom_rows(tz, tx, ty, mvt, levels: int = 1, buffer_px: int = 0):
     One lane, byte-identical to the scalar twin (pinned by the
     differential suite): the whole column wire-parses in one
     codec.parse_tile_column call; every child row carries its parent
-    feature's (key index, value index) codes, the parent layer's framed
-    values table serves as the dictionary of every key column, and ALL
-    child rows of the batch encode in ONE encode_multi_tile_batch call
-    per (layer, extent, version, keys) group; the kernel builds the same
-    totalMeta dictionaries encode_layer does. A parent the parser marks
+    feature's wire (key index, value index) pairs in wire order, into the
+    parent layer's keys and framed values table, and ALL child rows of
+    the batch encode in ONE encode_multi_tile_batch call per (layer,
+    extent, version, keys) group; the kernel builds the same totalMeta
+    dictionaries encode_layer does. A parent the parser marks
     scalar or _raw_gate rejects goes whole through overzoom_blob_scalar,
     at its turn, and its children join the same per-child frame merge.
     """
@@ -392,9 +392,9 @@ def _overzoom_rows(tz, tx, ty, mvt, levels: int = 1, buffer_px: int = 0):
             if not len(src):
                 continue
             ids, _, tv, tc, _, _ = lc
-            n = len(ids)
-            vcode = np.full((n, len(raw.keys)), -1, np.int64)
-            vcode[np.repeat(np.arange(n), tc // 2), tv[0::2]] = tv[1::2]
+            # each child carries its parent feature's wire pairs as they are
+            npairs = (tc // 2).astype(np.int64)
+            poff, pcnt = np.cumsum(npairs)[src] - npairs[src], npairs[src]
             groups.setdefault((raw.name, ext, raw.version, tuple(raw.keys)), []).append({
                 "tz": np.full(len(src), z2, np.int64),
                 "tx": ptx * s + cx,
@@ -403,7 +403,9 @@ def _overzoom_rows(tz, tx, ty, mvt, levels: int = 1, buffer_px: int = 0):
                 "gt": gt,
                 "svals": svals,
                 "slens": slens,
-                "codes": vcode[src],
+                "npairs": pcnt,
+                "pkey": wire.ragged_gather(tv[0::2].astype(np.int64), poff, pcnt),
+                "pval": wire.ragged_gather(tv[1::2].astype(np.int64), poff, pcnt),
                 # fully FRAMED Layer.values entries (0x22 + len + body)
                 "framed": [
                     wire.len_delimited(4, codec.encode_value_bytes(tag, v))
@@ -413,16 +415,16 @@ def _overzoom_rows(tz, tx, ty, mvt, levels: int = 1, buffer_px: int = 0):
 
     for (name, ext, version, keys), parts in groups.items():
         cat = {k: np.concatenate([p[k] for p in parts]) for k in (
-            "tz", "tx", "ty", "fid", "gt", "svals", "slens",
+            "tz", "tx", "ty", "fid", "gt", "svals", "slens", "npairs", "pkey",
         )}
         n = len(cat["fid"])
         geom_offsets = np.zeros(n + 1, np.int64)
         np.cumsum(cat["slens"], out=geom_offsets[1:])
+        pair_off = np.zeros(n + 1, np.int64)
+        np.cumsum(cat["npairs"], out=pair_off[1:])
         # chunk-local value indices offset into one concatenated table
         base = np.cumsum([0] + [len(p["framed"]) for p in parts[:-1]])
-        codes = np.concatenate([
-            np.where(p["codes"] >= 0, p["codes"] + b0, -1) for p, b0 in zip(parts, base)
-        ])
+        pval = np.concatenate([p["pval"] + b0 for p, b0 in zip(parts, base)])
         framed = [f for p in parts for f in p["framed"]]
         fbuf = np.frombuffer(b"".join(framed), np.uint8)
         foff = np.zeros(len(framed) + 1, np.int64)
@@ -432,7 +434,7 @@ def _overzoom_rows(tz, tx, ty, mvt, levels: int = 1, buffer_px: int = 0):
             np.zeros(n, np.int64), [name],
             cat["fid"], cat["gt"],
             cat["svals"], geom_offsets,
-            [(key, codes[:, j], fbuf, foff) for j, key in enumerate(keys)],
+            codec.MetaPairs(list(keys), pair_off, cat["pkey"], pval, fbuf, foff),
             version=version, extent=ext,
         )
         bounds = np.concatenate([tile_starts, [n]]).astype(np.int64)

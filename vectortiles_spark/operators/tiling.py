@@ -321,23 +321,6 @@ def cap_tile_bytes(features: DataFrame, max_bytes: int) -> DataFrame:
     )
 
 
-def _meta_to_dict(meta) -> dict:
-    out = {}
-    if meta is None:
-        return out
-    for m in meta:
-        tag = m["tag"]
-        if tag == codec.VAL_STRING:
-            out[m["key"]] = (tag, m["s"])
-        elif tag in (codec.VAL_DOUBLE, codec.VAL_FLOAT):
-            out[m["key"]] = (tag, float(m["d"]))
-        elif tag in (codec.VAL_INT, codec.VAL_UINT, codec.VAL_SINT):
-            out[m["key"]] = (tag, int(m["i"]))
-        elif tag == codec.VAL_BOOL:
-            out[m["key"]] = (tag, bool(m["b"]))
-    return out
-
-
 _CORE_COLS = {
     "tile_z", "tile_x", "tile_y", "layer", "geom_type", "feature_id",
     "meta", "geom_cmds", "geom_pt",
@@ -358,6 +341,104 @@ def _tag_for_arrow_type(t) -> int:
     raise ValueError(f"unsupported metadata column type {t}")
 
 
+# the struct field that holds a ``meta`` entry's value, per value tag
+_META_VALUE_FIELD = {
+    codec.VAL_STRING: "s", codec.VAL_FLOAT: "d", codec.VAL_DOUBLE: "d",
+    codec.VAL_INT: "i", codec.VAL_UINT: "i", codec.VAL_SINT: "i", codec.VAL_BOOL: "b",
+}
+
+
+def _meta_pairs(tbl, z, x, y) -> codec.MetaPairs:
+    """The rows' metadata as per-feature (key, value) pairs, built with
+    Arrow offsets: a row's struct ``meta`` entries in array order, then
+    its non-NULL plain metadata columns in column order. A key a row
+    repeats keeps its first position and its last value, as assigning
+    the pairs into a dict would. Values are dictionary-encoded per column
+    (per tag for struct entries) and framed vectorized.
+
+    A struct entry that is NULL, has a NULL key, a NULL or unknown tag,
+    or a NULL value field for its tag raises ValueError naming the tile
+    (``z``/``x``/``y`` are the rows' tile keys)."""
+    import pyarrow.compute as pc
+
+    n = tbl.num_rows
+    keys: dict[str, int] = {}
+    tables = []  # framed value tables, laid end to end in this order
+
+    def encode(col, tag):
+        """Entries of col's values in the tables laid end to end (-1: NULL)."""
+        base = sum(len(off) - 1 for _, off in tables)
+        d = col.dictionary_encode()
+        tables.append(codec.frame_values_vec(tag, d.dictionary))
+        codes = pc.fill_null(d.indices, -1).to_numpy(zero_copy_only=False).astype(np.int64)
+        return np.where(codes >= 0, codes + base, -1)
+
+    # ---- struct entries: one row per list element ----
+    s_row = s_key = s_val = np.zeros(0, np.int64)
+    if "meta" in tbl.column_names:
+        meta = tbl["meta"].combine_chunks()
+        if hasattr(meta, "chunk"):  # older pyarrow returns ChunkedArray
+            meta = meta.chunk(0)
+        ent = pc.list_flatten(meta)
+        s_row = pc.list_parent_indices(meta).to_numpy(zero_copy_only=False).astype(np.int64)
+        tag = pc.fill_null(ent.field("tag"), 0).to_numpy(zero_copy_only=False).astype(np.int64)
+        checks = [
+            ("a NULL entry", ent.is_null().to_numpy(zero_copy_only=False)),
+            ("a NULL key", ent.field("key").is_null().to_numpy(zero_copy_only=False)),
+            ("a NULL or unknown tag", ~np.isin(tag, list(_META_VALUE_FIELD))),
+        ] + [
+            (f"a NULL {fld!r} under tag {t}",
+             (tag == t) & ent.field(fld).is_null().to_numpy(zero_copy_only=False))
+            for t, fld in _META_VALUE_FIELD.items()
+        ]
+        for what, bad in checks:
+            if bad.any():
+                r = s_row[np.flatnonzero(bad)[0]]
+                raise ValueError(
+                    f"encode_tiles: column 'meta' has an entry with {what} for "
+                    f"tile z/x/y {z[r]}/{x[r]}/{y[r]}"
+                )
+        kd = ent.field("key").dictionary_encode()
+        kmap = np.array(
+            [keys.setdefault(k, len(keys)) for k in kd.dictionary.to_pylist()], np.int64
+        )
+        s_key = kmap[kd.indices.to_numpy(zero_copy_only=False)]
+        s_val = np.empty(len(ent), np.int64)
+        for t in np.unique(tag).tolist():
+            sel = np.flatnonzero(tag == t)
+            s_val[sel] = encode(ent.field(_META_VALUE_FIELD[t]).take(sel), t)
+
+    # ---- plain columns: one pair per non-NULL value, row-major ----
+    fields = [f for f in tbl.schema if f.name not in _CORE_COLS]
+    codes = np.empty((n, len(fields)), np.int64)
+    for c, field in enumerate(fields):
+        col = tbl[field.name].combine_chunks()
+        if hasattr(col, "chunk"):
+            col = col.chunk(0)
+        codes[:, c] = encode(col, _tag_for_arrow_type(field.type))
+    p_row, p_col = np.nonzero(codes >= 0)
+    p_key = np.array([keys.setdefault(f.name, len(keys)) for f in fields], np.int64)[p_col]
+    p_val = codes[p_row, p_col]
+
+    # ---- each row's struct pairs, then its plain pairs: both sides come
+    # row-sorted, so the stable sort only merges two runs ----
+    row = np.concatenate([s_row, p_row])
+    o = np.argsort(row, kind="stable")
+    row, key, val = row[o], np.concatenate([s_key, p_key])[o], np.concatenate([s_val, p_val])[o]
+    if len(s_row):  # only struct entries can repeat a key within a row
+        o = np.lexsort((key, row))
+        dup = (row[o][1:] == row[o][:-1]) & (key[o][1:] == key[o][:-1])
+        if dup.any():
+            head = np.concatenate([[True], ~dup])  # first pair of a (row, key)
+            val[o[head]] = val[o[np.concatenate([~dup, [True]])]]  # its last value
+            keep = np.zeros(len(key), bool)
+            keep[o[head]] = True
+            row, key, val = row[keep], key[keep], val[keep]
+    off = np.zeros(n + 1, np.int64)
+    np.cumsum(np.bincount(row, minlength=n), out=off[1:])
+    return codec.MetaPairs(list(keys), off, key, val, *codec.concat_value_tables(tables))
+
+
 def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | None = None):
     """Stream-encoder factory (extent is captured in the closure so every
     tile declares the layer extent that the upstream pixel math used).
@@ -367,26 +448,21 @@ def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | N
     all complete tiles of a batch in ONE codec.encode_multi_tile_batch
     call: one Python crossing per ~64k rows instead of one per tile.
 
-    Metadata columns (any column beyond the core feature schema) are
-    dictionary-encoded once per batch and their uniques pre-framed to wire
-    bytes; a NULL value leaves that key off the feature. The kernel turns
-    them into each layer's totalMeta dictionaries, so a tile's bytes are
-    the ones codec.encode_layer_from_streams writes for its features. Rows with an
-    empty command stream are dropped (an empty feature would make the tile
-    undecodable, Internal.hs:296). A tile left with no rows still yields
-    its row (mvt=b"", n_features=0, n_layers=0): refresh_tiles' rebuild
-    contract relies on it.
-
-    A tile with any row carrying the per-feature ARRAY<STRUCT> ``meta``
-    form (decode_tiles output) is encoded by the reference
-    codec.encode_layer_from_streams instead, one call per (tile, layer)
-    run, with the struct keys merged with the plain metadata columns. The
-    choice is made per tile, so a tile's bytes depend only on its rows."""
+    Metadata reaches the kernel in one form, per-feature (key, value)
+    pairs (_meta_pairs): plain metadata columns (any column beyond the
+    core feature schema) and decode_tiles' per-feature ARRAY<STRUCT>
+    ``meta`` alike, values dictionary-encoded once per batch and their
+    uniques pre-framed to wire bytes; a NULL plain value leaves that key
+    off the feature. The kernel turns the pairs into each layer's
+    totalMeta dictionaries, so a tile's bytes are the ones
+    codec.encode_layer_from_streams writes for its features with their
+    metadata merged into one dict, and depend only on the tile's rows.
+    Rows with an empty command stream are dropped (an empty feature would
+    make the tile undecodable, Internal.hs:296). A tile left with no rows
+    still yields its row (mvt=b"", n_features=0, n_layers=0):
+    refresh_tiles' rebuild contract relies on it."""
     import pandas as pd
     import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from ..mvt import wire
 
     def flush(tbl: pa.Table):
         """Encode every (complete) tile run in tbl."""
@@ -435,75 +511,32 @@ def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | N
             gvals = cmds_arr.values.to_numpy(zero_copy_only=False)
         glens = goff[1:] - goff[:-1]
 
-        # dictionary-encode metadata columns once per batch (Arrow C++, no
-        # PyObject churn) and frame their uniques' value bytes vectorized
-        meta_fields = [f for f in tbl.schema if f.name not in _CORE_COLS]
-        meta_specs: list[tuple[str, np.ndarray, np.ndarray, np.ndarray]] = []
-        for field in meta_fields:
-            col = tbl[field.name].combine_chunks()
-            if hasattr(col, "chunk"):  # older pyarrow returns ChunkedArray
-                col = col.chunk(0)
-            d = col.dictionary_encode()
-            codes = pc.fill_null(d.indices, -1).to_numpy(zero_copy_only=False).astype(np.int64)
-            fbuf, foff = codec.frame_values_vec(_tag_for_arrow_type(field.type), d.dictionary)
-            meta_specs.append((field.name, codes, fbuf, foff))
+        meta = _meta_pairs(tbl, z, x, y)
 
+        # ---- whole-batch kernel: every tile in ~20 array passes ----
         n_tiles = len(starts)
         keep = glens > 0
         mvts = [b""] * n_tiles
         n_feats = np.bincount(tile_of[keep], minlength=n_tiles)
         n_layers = np.zeros(n_tiles, dtype=np.int64)
-        by_ref = np.zeros(n_tiles, dtype=bool)  # tiles with struct meta rows
-        if "meta" in tbl.column_names:
-            mlen = pc.fill_null(pc.list_value_length(tbl["meta"]), 0)
-            by_ref[tile_of[mlen.to_numpy(zero_copy_only=False) > 0]] = True
-
-        # ---- whole-batch kernel: every other tile in ~20 array passes ----
-        kern = keep & ~by_ref[tile_of]
-        rows = np.flatnonzero(kern)
+        rows = np.flatnonzero(keep)
         if rows.size:
-            kvals = gvals[goff[0]:goff[-1]][np.repeat(kern, glens)]
+            kvals = gvals[goff[0]:goff[-1]][np.repeat(keep, glens)]
             koff = np.concatenate([[0], np.cumsum(glens[rows])])
+            npairs = np.diff(meta.off)
+            psel = np.repeat(keep, npairs)
             out, ts, runs = codec.encode_multi_tile_batch(
                 z[rows], x[rows], y[rows], lcodes[rows], lnames, fids[rows], gts[rows],
-                kvals, koff, [(k, c[rows], fb, fo) for k, c, fb, fo in meta_specs],
+                kvals, koff, meta._replace(
+                    off=np.concatenate([[0], np.cumsum(npairs[rows])]),
+                    key=meta.key[psel], val=meta.val[psel],
+                ),
                 extent=extent,
             )
             tiles = tile_of[rows[ts]]
             for t, m in zip(tiles.tolist(), out):
                 mvts[t] = m
             n_layers[tiles] = runs
-
-        # ---- reference lane: tiles carrying struct meta, per (tile, layer) ----
-        if by_ref.any():
-            metas = tbl["meta"].to_pylist()
-            plain = [
-                (f.name, _tag_for_arrow_type(f.type), tbl[f.name].to_pylist())
-                for f in meta_fields
-            ]
-            run_chg = change | (lcodes[1:] != lcodes[:-1])
-            run_lo = np.concatenate([[0], np.flatnonzero(run_chg) + 1])
-            run_hi = np.concatenate([run_lo[1:], [n]])
-            for lo, hi in zip(run_lo.tolist(), run_hi.tolist()):
-                t = int(tile_of[lo])
-                idx = np.flatnonzero(keep[lo:hi]) + lo
-                if not by_ref[t] or not idx.size:
-                    continue
-                feats = []
-                for i in idx.tolist():
-                    md = _meta_to_dict(metas[i])
-                    for key, tag, vals in plain:
-                        if vals[i] is not None:
-                            md[key] = (tag, vals[i])
-                    feats.append(
-                        (int(fids[i]), md, int(gts[i]),
-                         gvals[goff[i]:goff[i + 1]].astype(np.uint32))
-                    )
-                layer_bytes = codec.encode_layer_from_streams(
-                    lnames[lcodes[lo]], feats, extent=extent
-                )
-                mvts[t] += wire.len_delimited(3, layer_bytes)
-                n_layers[t] += 1
 
         return pa.record_batch(
             {

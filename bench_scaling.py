@@ -41,8 +41,7 @@ from vectortiles_spark.operators import tiling
 
 cpus = {cpus}
 spark = get_spark(
-    app_name=f"scale{{cpus}}", master={master!r}, shuffle_partitions=64,
-    extra_conf={extra_conf!r},
+    app_name=f"scale{{cpus}}", master={master!r}, extra_conf={extra_conf!r},
 )
 imgs = spark.read.parquet({images!r})
 feats = tiling.point_features(
@@ -68,7 +67,7 @@ def run_level(
     """One fresh-JVM measurement. ``master`` defaults to local[cpus];
     pass a local-cluster[n,c,mem] string for the multi-JVM tier (executor
     JVMs need PYTHONPATH to import this repo's python workers)."""
-    extra = {}
+    extra = {"spark.sql.shuffle.partitions": "64"}
     if master is None:
         master = f"local[{cpus}]"
     else:

@@ -60,11 +60,9 @@ def ensure_chunk(rows: int):
 
 
 def run_level(procs: int, rows: int) -> float:
-    env = dict(os.environ, MALLOC_MMAP_MAX_="0", MALLOC_TRIM_THRESHOLD_="1000000000",
-               ARROW_DEFAULT_MEMORY_POOL="system")
     code = WORK.format(repo=str(REPO), chunk=CHUNK)
     ps = [
-        subprocess.Popen([sys.executable, "-c", code], stdout=subprocess.PIPE, env=env)
+        subprocess.Popen([sys.executable, "-c", code], stdout=subprocess.PIPE)
         for _ in range(procs)
     ]
     times = [float(p.communicate()[0]) for p in ps]

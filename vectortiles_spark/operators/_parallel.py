@@ -11,6 +11,9 @@ running the plan):
   wide is returned as it is, so it gains no exchange.
 * ``python_partitions``: the partition count of a Python-bound stage
   (the fused clip/simplify/geom kernel, MVT encode, downzoom merge).
+
+Both, and ``session.get_spark``'s default ``local[N]``, count the host's
+cores with ``host_cpus``.
 """
 
 from __future__ import annotations
@@ -19,6 +22,14 @@ import os
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame
+
+
+def host_cpus() -> int:
+    """Cores this process may run on: ``$SPARK_GRAFT_CPUS`` when it is a
+    positive integer, else the CPUs in the affinity mask (a container or
+    ``taskset`` pin, which ``os.cpu_count()`` ignores)."""
+    n = os.environ.get("SPARK_GRAFT_CPUS", "")
+    return int(n) if n.isdigit() and int(n) > 0 else len(os.sched_getaffinity(0))
 
 
 def _plan_partitions(plan) -> int:
@@ -83,7 +94,7 @@ def python_partitions(sc: SparkContext) -> int:
     0.80-0.91 s with its clip kernel in 4 tasks (rows/s IQR 93),
     1.11-1.21 s in 2 tasks (IQR 48) and 1.61-1.83 s in 1 task."""
     parts = sc.defaultParallelism
-    ncpu = os.cpu_count() or parts
+    ncpu = host_cpus()
     if sc._jsc.sc().isLocal() and parts >= ncpu:
         return max(1, ncpu // 2)
     return parts
